@@ -21,9 +21,10 @@ object Bench {
     * build; `cache_build_sec` carries the build cost (22.4 s cold
     * anchor). Emitted in both JSON lines ("index_backed" full names /
     * "ib" positional indices) so these rows cannot be read as raw-compute
-    * query speed. BenchContractSpec pins the list against the registry
-    * and the cache call sites — adding a consumer without extending this
-    * list is the review tripwire. */
+    * query speed. SessionConfSpec pins that every name here is a
+    * registered query and that the names are distinct. Nothing checks the
+    * list against the `prewarmCaches` call sites: a new index consumer
+    * must be added here by hand. */
   val IndexBackedQueries: Seq[String] = Seq(
     "q27_ngram_jaccard", "q28_minhash_lsh", "q29_simhash",
     "q60_neardup_clusters", "q79_neardup_clusters_star",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * One shuffle on the key, state bounded by the window frame, zero row
   * blow-up — the same shape holds at 100 TB. Ties at equal time resolve
   * right-before-left (inclusive semantics, matching DuckDB's ASOF JOIN
-  * `ON l.t >= r.t`, the oracle for q41).
+  * `ON l.t >= r.t`, the oracle for q41 and q54).
   */
 object AsOfJoin {
 
@@ -58,41 +58,5 @@ object AsOfJoin {
       .withColumn("__vals", last(col("__vals"), ignoreNulls = true).over(w))
       .filter(col("__tag") === 1)
       .select(leftCols.map(col) ++ outputs.map(o => col(s"__vals.$o").as(o)): _*)
-  }
-
-  /** The same as-of semantics through the native physical operator
-    * ([[graft.plans.AsOfJoinExec]]) — a streaming merge with O(1) state per
-    * partition instead of a window carry over the union. Registers the
-    * planner strategy on the session idempotently via the public
-    * `experimental.extraStrategies` hook.
-    *
-    * `left` and `right` must not share attribute lineage (load the right
-    * side separately rather than filtering one frame twice) — the node
-    * binds key/time columns by exprId. */
-  def asofNative(left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String,
-      valueCols: Map[String, String],
-      tiebreak: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val spark = left.sparkSession
-    Bridge.registerStrategy(spark, graft.plans.AsOfJoinStrategy)
-    val lPlan = Bridge.analyzed(left)
-    val rPlan = Bridge.analyzed(right)
-    require(lPlan.outputSet.intersect(rPlan.outputSet).isEmpty,
-      "asofNative sides must not share attribute lineage; re-read the right side")
-    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =
-      p.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(s"asofNative: column $n not found"))
-    val pairs = valueCols.toSeq
-    val carried = pairs.map { case (in, out) =>
-      org.apache.spark.sql.catalyst.expressions
-        .AttributeReference(out, attr(rPlan, in).dataType, nullable = true)()
-    }
-    Bridge.ofRows(spark, graft.plans.AsOfJoinNode(
-      lPlan, rPlan,
-      attr(lPlan, key), attr(rPlan, key),
-      attr(lPlan, leftTime), attr(rPlan, rightTime),
-      pairs.map { case (in, _) => attr(rPlan, in) },
-      attr(rPlan, tiebreak), carried))
   }
 }

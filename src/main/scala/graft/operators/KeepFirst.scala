@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
 /** Public wrapper for the native keep-first dedup
   * ([[graft.plans.KeepFirstExec]]): resolves the key/tiebreak columns on
   * the analyzed plan and registers the planner strategy idempotently via
-  * the public `experimental.extraStrategies` hook (the
-  * [[AsOfJoin.asofNative]] pattern).
+  * the public `experimental.extraStrategies` hook
+  * ([[org.apache.spark.sql.graftbridge.Bridge.registerStrategy]]).
   *
   * `tiebreak` must totally order rows within a key group for the pick to
   * be deterministic — callers pass every non-key column

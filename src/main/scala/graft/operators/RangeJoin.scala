@@ -109,15 +109,18 @@ object RangeJoin {
       .withColumn("__bucket", explode(sequence(
         floorDiv(col(lo), bucketWidth), floorDiv(col(hi), bucketWidth))))
     // the overlap-start rule in MULTIPLY form: `b == floor(start/w)` ⟺
-    // `b·w ≤ start < (b+1)·w` — two long multiply-compares per candidate
-    // pair instead of a division chain on the join's hottest expression
-    // (round 14; the candidate-pair count is the operator's whole cost)
+    // `b·w ≤ start < b·w + w` — long multiply-compares per candidate pair
+    // instead of a division chain on the join's hottest expression (the
+    // candidate-pair count is the operator's whole cost). The upper bound
+    // is spelled `start - b·w < w`: `(b+1)·w` leaves the long range for
+    // the last bucket below Long.MaxValue (an ANSI overflow error), while
+    // `start - b·w` lies in [0, w) whenever the first conjunct holds.
     val start = greatest(col(leftLo), col(rightLo))
+    val bucketLo = col("__bucket") * bucketWidth
     expand(left, leftLo, leftHi)
       .join(expand(right, rightLo, rightHi), Seq("__bucket"))
       .filter(col(leftLo) <= col(rightHi) && col(rightLo) <= col(leftHi))
-      .filter(col("__bucket") * bucketWidth <= start &&
-        start < (col("__bucket") + 1) * bucketWidth)
+      .filter(bucketLo <= start && start - bucketLo < bucketWidth)
       .drop("__bucket")
   }
 

@@ -35,8 +35,10 @@ object Clean {
     * the window form and the min-struct aggregate form pay (row_number
     * needs a partial+final sorted WindowGroupLimit; min over a struct has
     * no fixed-width buffer so both aggregate phases plan as
-    * SortAggregate). Pick equivalence to `min(struct(tiebreak…, rest…))`
-    * is pinned by PlansSpec's differential and the q08/q11/q13 oracles. */
+    * SortAggregate). This is the one production keep-first form. Pick
+    * equivalence to `min(struct(tiebreak…, rest…))` per key is pinned by
+    * KeepFirstNativeSpec's differential against an aggregate reference
+    * in the test tree, and by the q11/q13 oracles. */
   def dedupKeepFirst(df: DataFrame, key: String = "order_id",
       orderCols: Seq[String] = KeepFirstTiebreak): DataFrame = {
     if (!has(df, key)) df
@@ -44,28 +46,6 @@ object Clean {
       val tiebreak = orderCols.filter(has(df, _))
       val rest = df.columns.filterNot(c => c == key || tiebreak.contains(c))
       graft.operators.KeepFirst.native(df, Seq(key), tiebreak ++ rest)
-    }
-  }
-
-  /** The aggregate form of [[dedupKeepFirst]] — `min(struct(tiebreak…,
-    * rest…))` per key. Kept as the map-side-combining variant for inputs
-    * with a LARGE duplication factor (the partial aggregate collapses
-    * duplicates before the exchange, shuffling 1/d of the rows at the
-    * price of a pre-shuffle SortAggregate pass) and as the differential
-    * anchor for the native operator's semantics. */
-  def dedupKeepFirstAgg(df: DataFrame, key: String = "order_id",
-      orderCols: Seq[String] = KeepFirstTiebreak): DataFrame = {
-    if (!has(df, key)) df
-    else {
-      val tiebreak = orderCols.filter(has(df, _))
-      val rest = df.columns.filterNot(c => c == key || tiebreak.contains(c))
-      if (tiebreak.isEmpty && rest.isEmpty) df.dropDuplicates(key)
-      else {
-        val packed = struct((tiebreak ++ rest).map(col): _*)
-        df.groupBy(col(key)).agg(min(packed).as("__row"))
-          .select(df.columns.toIndexedSeq.map(c =>
-            if (c == key) col(c) else col(s"__row.$c").as(c)): _*)
-      }
     }
   }
 

@@ -10,8 +10,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 
 /** Native keep-first-per-key dedup: logical node + strategy + physical
-  * operator — the third tier-(c) operator (after the as-of join), for the
-  * one plan shape neither the window nor the aggregate form achieves.
+  * operator — the engine's one tier-(c) operator (custom `LogicalPlan` +
+  * `SparkStrategy` + `SparkPlan`), for the one plan shape neither the
+  * window nor the aggregate form achieves.
   *
   * Spark offers two ways to express "keep the first row per key under a
   * total order", and both pay for the generality they don't need here:
@@ -40,8 +41,9 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * dedup workloads d is small (≲2) and the pre-sort touches every row
   * either way, so one post-shuffle sort of d× rows beats two sorts of
   * 1×+d/1× rows for all realistic d; the q77-style banded paths handle
-  * corpora where d is genuinely large. Semantics are pinned against the
-  * aggregate form by PlansSpec and the q08/q11/q13 oracles.
+  * corpora where d is genuinely large. Semantics are pinned against an
+  * aggregate reference in the test tree by KeepFirstNativeSpec, and by
+  * the q11/q13 oracles.
   *
   * Reference behavior: `drop_duplicates(subset=[key], keep='first')`,
   * `transformation.py:64-73`.

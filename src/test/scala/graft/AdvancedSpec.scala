@@ -279,6 +279,24 @@ class AdvancedSpec extends SparkSpec {
     }
   }
 
+  test("intervalOverlap: overlapping spans in the last bucket below Long.MaxValue emit one pair") {
+    import graft.operators.RangeJoin
+    import spark.implicits._
+    // both spans sit in [Long.MaxValue - w + 1, Long.MaxValue] and overlap
+    // at one point whose bucket is the last one, where the bucket's
+    // exclusive end (b + 1)·w is past Long.MaxValue; under ANSI an
+    // overflowing bound check fails the query instead of emitting the pair
+    for (w <- Seq(1L, 8L, 10L)) {
+      val mid = Long.MaxValue - w / 2
+      val left = Seq(("L", Long.MaxValue - w + 1, mid)).toDF("lid", "llo", "lhi")
+      val right = Seq(("R", mid, Long.MaxValue)).toDF("rid", "rlo", "rhi")
+      val rows = RangeJoin.intervalOverlap(left, right,
+        "llo", "lhi", "rlo", "rhi", w)
+        .select("lid", "rid").as[(String, String)].collect()
+      assert(rows.toSeq == Seq(("L", "R")), s"W=$w: ${rows.mkString(", ")}")
+    }
+  }
+
   test("scd2: intervals chain half-open per key, exactly one current, ties deterministic") {
     import graft.operators.Scd2
     import spark.implicits._

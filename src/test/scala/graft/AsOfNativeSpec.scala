@@ -3,8 +3,9 @@ package graft
 import graft.operators.AsOfJoin
 import org.apache.spark.sql.functions._
 
-/** The native as-of physical operator ([[graft.plans.AsOfJoinExec]])
-  * against the composed union-tag implementation and edge cases. */
+/** The union-tag as-of join ([[AsOfJoin.asof]], the engine's only as-of
+  * form) against the brute-force reference ([[References.asof]]) and on
+  * the null and no-match edge cases. */
 class AsOfNativeSpec extends SparkSpec {
 
   private def purchases = Tables.events(spark, sf)
@@ -13,26 +14,17 @@ class AsOfNativeSpec extends SparkSpec {
     .filter(col("event_type") === "signup")
     .select(col("event_id"), col("user_id"), col("ts"), col("value"))
 
-  test("native as-of equals the composed union-tag as-of row-for-row") {
+  test("union-tag as-of equals the brute-force reference row-for-row") {
     val vals = Map("event_id" -> "signup_event_id", "value" -> "signup_value")
-    val native = AsOfJoin.asofNative(purchases, signups, "user_id", "ts", "ts",
+    val got = AsOfJoin.asof(purchases, signups, "user_id", "ts", "ts",
       vals, "event_id")
-    val composed = AsOfJoin.asof(purchases, signups, "user_id", "ts", "ts",
+    val want = References.asof(purchases, signups, "user_id", "ts", "ts",
       vals, "event_id")
-    assert(native.count() == purchases.count(), "left-outer: one row per left row")
-    assert(native.exceptAll(composed).count() == 0 &&
-      composed.exceptAll(native).count() == 0,
-      "native and composed as-of disagree")
-  }
-
-  test("physical plan uses AsOfJoinExec, no Union/Window") {
-    val df = AsOfJoin.asofNative(purchases, signups, "user_id", "ts", "ts",
-      Map("value" -> "signup_value"), "event_id")
-    df.collect() // finalize AQE plan
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("AsOfJoin"), s"native exec missing:\n$plan")
-    assert(!plan.contains("Union") && !plan.contains("RunningWindow") &&
-      !plan.contains("Window("), "composed-shape operators leaked into the native plan")
+    assert(got.count() == purchases.count(), "left-outer: one row per left row")
+    assert(got.filter(col("signup_event_id").isNotNull).count() > 0,
+      "fixture has no matched rows")
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+      "union-tag as-of and the brute-force reference disagree")
   }
 
   test("null right values carry atomically; null keys/times never match") {
@@ -50,11 +42,11 @@ class AsOfNativeSpec extends SparkSpec {
       (Option(2L), Option.empty[Long], Option(9.0), Option(4L)))
       .toDF("user_id", "ts", "v", "w")
     val vals = Map("v" -> "m_v", "w" -> "m_w")
-    val native = AsOfJoin.asofNative(l, r, "user_id", "ts", "ts", vals, "w")
+    val got = AsOfJoin.asof(l, r, "user_id", "ts", "ts", vals, "w")
       .orderBy("user_id")
-    val composed = AsOfJoin.asof(l, r, "user_id", "ts", "ts", vals, "w")
+    val want = References.asof(l, r, "user_id", "ts", "ts", vals, "w")
       .orderBy("user_id")
-    for (out <- Seq(native, composed)) {
+    for (out <- Seq(got, want)) {
       val rows = out.collect()
       assert(rows.length == 3)
       val matched = rows.find(x => !x.isNullAt(x.fieldIndex("m_w")) &&
@@ -65,8 +57,7 @@ class AsOfNativeSpec extends SparkSpec {
       assert(rows.count(x => x.isNullAt(x.fieldIndex("m_w"))) == 2,
         "null-key/null-time left rows must not match")
     }
-    assert(native.exceptAll(composed).count() == 0 &&
-      composed.exceptAll(native).count() == 0)
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
   }
 
   test("left rows before any right match carry nulls") {
@@ -74,7 +65,7 @@ class AsOfNativeSpec extends SparkSpec {
     val l = Seq((1L, 10L, 100.0), (1L, 30L, 200.0), (2L, 5L, 300.0))
       .toDF("k", "t", "lv")
     val r = Seq((1L, 20L, 7.0)).toDF("k", "t", "rv")
-    val out = AsOfJoin.asofNative(
+    val out = AsOfJoin.asof(
       l.select(col("k").as("user_id"), col("t").as("ts"), col("lv")),
       r.select(col("k").as("user_id"), col("t").as("ts"), col("rv"),
         col("t").as("tb")),

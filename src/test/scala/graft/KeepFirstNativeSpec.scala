@@ -8,8 +8,9 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** [[graft.plans.KeepFirstExec]]: the native keep-first dedup matches the
-  * aggregate form row-for-row (including null keys and null tiebreaks) and
-  * plans as exactly one exchange + one sort + the streaming pass. */
+  * aggregate reference ([[References.keepFirstAgg]]) row-for-row
+  * (including null keys and null tiebreaks) and plans as exactly one
+  * exchange + one sort + the streaming pass. */
 class KeepFirstNativeSpec extends SparkSpec {
 
   import spark.implicits._
@@ -29,7 +30,7 @@ class KeepFirstNativeSpec extends SparkSpec {
 
   test("native pick equals the min-struct aggregate pick") {
     val nat = Clean.dedupKeepFirst(fixture, key = "k", orderCols = Seq("o", "v"))
-    val agg = Clean.dedupKeepFirstAgg(fixture, key = "k", orderCols = Seq("o", "v"))
+    val agg = References.keepFirstAgg(fixture, key = "k", orderCols = Seq("o", "v"))
     assert(nat.columns.toSeq == fixture.columns.toSeq)
     val n = nat.collect().map(_.toSeq).toSet
     val a = agg.collect().map(_.toSeq).toSet
@@ -43,7 +44,7 @@ class KeepFirstNativeSpec extends SparkSpec {
     val withDups = dirty.unionAll(dirty.filter(col("api_post_id") % 3 === 0)
       .withColumn("ingested_at", col("ingested_at") + expr("INTERVAL 1 DAY")))
     val nat = Clean.dedupKeepFirst(withDups)
-    val agg = Clean.dedupKeepFirstAgg(withDups)
+    val agg = References.keepFirstAgg(withDups)
     // the dirty domain itself carries duplicate order_ids (duplicate
     // (l_orderkey, l_linenumber) pairs in the generator), so the ground
     // truth is the distinct-key count, NOT dirty.count()
@@ -105,7 +106,7 @@ class KeepFirstNativeSpec extends SparkSpec {
     val df = Seq((-0.0, 5, "neg"), (0.0, 1, "pos"), (1.5, 2, "other"))
       .toDF("k", "o", "v")
     val nat = KeepFirst.native(df, Seq("k"), Seq("o", "v"))
-    val agg = Clean.dedupKeepFirstAgg(df, key = "k", orderCols = Seq("o", "v"))
+    val agg = References.keepFirstAgg(df, key = "k", orderCols = Seq("o", "v"))
     val n = nat.collect().map(_.toSeq).toSet
     assert(n == agg.collect().map(_.toSeq).toSet, s"native $n diverges from aggregate")
     assert(n.size == 2 && n.exists(_ == Seq(0.0, 1, "pos")))
@@ -132,7 +133,7 @@ class KeepFirstNativeSpec extends SparkSpec {
     val df = Seq((-0.0, 5, "neg"), (0.0, 1, "pos"), (1.5, 2, "other"))
       .toDF("k", "o", "v")
     val nat = KeepFirst.native(df, Seq("K"), Seq("O", "v"))
-    val agg = Clean.dedupKeepFirstAgg(df, key = "k", orderCols = Seq("o", "v"))
+    val agg = References.keepFirstAgg(df, key = "k", orderCols = Seq("o", "v"))
     val n = nat.collect().map(_.toSeq).toSet
     assert(n == agg.collect().map(_.toSeq).toSet,
       s"case-insensitive key skipped normalization: $n")

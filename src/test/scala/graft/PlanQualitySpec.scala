@@ -120,14 +120,29 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("q08: raw keep-first window idiom gets the WindowGroupLimit trim") {
-    // q08 deliberately spells the raw row_number()=1 idiom (the
-    // KeepFirstToAggregate rule's target — extension-session behavior is
-    // pinned in PlansSpec); in a plain session it must at least plan the
-    // per-partition top-1 trim and a single hash exchange.
+    // q08 deliberately spells the raw row_number()=1 idiom (the engine's
+    // keyed dedup runs the native KeepFirstExec instead, pinned in
+    // KeepFirstNativeSpec); it must at least plan the per-partition top-1
+    // trim and a single hash exchange.
     val p = planOf("q08_dedup_key_keepfirst")
     assert(p.contains("WindowGroupLimit"), s"no per-key limit pushdown:\n$p")
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(exchanges <= 1, s"dedup hash-shuffles $exchanges times:\n$p")
+  }
+
+  test("q41/q54: as-of join plans as one keyed window, no join, one hash shuffle") {
+    // both queries run the union-tag AsOfJoin.asof: one window over the
+    // key carries the latest right row forward. A join operator here
+    // means the as-of degenerated to the candidate-pair blow-up, and a
+    // second hash exchange breaks the one-shuffle-on-the-key shape.
+    for (q <- Seq("q41_asof_join", "q54_asof_join_native")) {
+      val p = planOf(q)
+      assert(p.contains("Window ["), s"$q: no keyed window:\n$p")
+      assert(!"(HashJoin|SortMergeJoin|NestedLoopJoin|CartesianProduct)".r
+        .findFirstIn(p).isDefined, s"$q: as-of planned a join:\n$p")
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
+      assert(exchanges <= 1, s"$q: as-of hash-shuffles $exchanges times:\n$p")
+    }
   }
 
   test("q49: grouped top-k keeps the WindowGroupLimit optimization") {
@@ -789,9 +804,10 @@ class PlanQualitySpec extends SparkSpec {
       // hash partitioning satisfies their clustered distributions. The
       // earlier distinct-then-repartition order shuffled the edges twice.
       val buildPlan = edges.queryExecution.executedPlan.toString
-      // round 14: the build width is scale-derived (~64 MB/partition from
-      // the input estimate), so at test SF the src exchange degenerates
-      // to SinglePartition — still one src-colocating exchange
+      // round 14: the build width is scale-derived (one partition per
+      // ~1 MB of membership-frame estimate, with x4 pair fan-out
+      // headroom), so at test SF the src exchange degenerates to
+      // SinglePartition — still one src-colocating exchange
       assert("Exchange hashpartitioning\\(src#\\d+L, \\d".r
         .findFirstIn(buildPlan).isDefined ||
         buildPlan.contains("Exchange SinglePartition"),

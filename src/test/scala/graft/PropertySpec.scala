@@ -363,10 +363,10 @@ class PropertySpec extends SparkSpec {
     assert(out.forall(r => Set("en", "es", "de", "fr", "unknown").contains(r.getString(0))))
   }
 
-  test("native as-of join ≡ composed as-of on random frames (property, 8 frames)") {
+  test("union-tag as-of ≡ brute-force as-of on random frames (property, 8 frames)") {
     import spark.implicits._
     // small key/time domains force heavy duplication, empty keys, ties at
-    // equal times — the regimes where a hand-written merge goes wrong
+    // equal times — the regimes where the carry order goes wrong
     val rowGen = for {
       k <- Gen.chooseNum(0L, 5L)
       t <- Gen.chooseNum(0L, 20L)
@@ -382,17 +382,14 @@ class PropertySpec extends SparkSpec {
         .map { case ((k, t, _, v), ix) => (k, t, ix.toLong, v) }
       val rRows = rFrames(i)
       val l = lRows.toDF("user_id", "ts", "event_id", "lv")
-      val r1 = rRows.toDF("user_id", "ts", "event_id", "value")
-      val r2 = rRows.toDF("user_id", "ts", "event_id", "value")
+      val r = rRows.toDF("user_id", "ts", "event_id", "value")
       val vals = Map("event_id" -> "m_id", "value" -> "m_v")
-      val native = graft.operators.AsOfJoin.asofNative(
-        l, r1, "user_id", "ts", "ts", vals, "event_id")
-      val composed = graft.operators.AsOfJoin.asof(
-        l, r2, "user_id", "ts", "ts", vals, "event_id")
-      assert(native.count() == lRows.length.toLong, s"frame $i: not left-outer")
-      assert(native.exceptAll(composed).count() == 0 &&
-        composed.exceptAll(native).count() == 0,
-        s"frame $i: native and composed as-of diverge")
+      val got = graft.operators.AsOfJoin.asof(
+        l, r, "user_id", "ts", "ts", vals, "event_id")
+      val want = References.asof(l, r, "user_id", "ts", "ts", vals, "event_id")
+      assert(got.count() == lRows.length.toLong, s"frame $i: not left-outer")
+      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+        s"frame $i: union-tag and brute-force as-of diverge")
     }
   }
 
