@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE place the engine's load-bearing session configuration lives.
-  * Every main (Bench, Verify, RunPipeline) builds through here so a
-  * static conf can't silently drop out of one copy during a refactor —
-  * SessionConfSpec asserts the critical settings on a factory-built
-  * session.
+  * Every main (Bench, Verify, RunPipeline, Smoke, Explain) builds
+  * through here so a static conf can't silently drop out of one copy
+  * during a refactor — SessionConfSpec asserts the critical settings on
+  * a factory-built session, and fails if any other main-tree file calls
+  * `SparkSession.builder` itself.
   *
   * Load-bearing settings and why:
   *

@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local mirror of the driver's smoke check: run [[SparkEntry.entry]] on
   * sf0.001 and print its row count and columns. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(defaultCpus = "4")
     val df = SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()}")
     println(s"ENTRY_COLS=${df.columns.mkString(",")}")

@@ -1674,7 +1674,7 @@ object Dedup {
     // needs exactly this fp clustering anyway, and the hot aggregate's
     // two phases ride the same exchange (guide §2.4). Measured at
     // sf0.1: q82 median 3.33 → 2.85 s (same min), rows identical
-    // (ProfileWinnow differential).
+    // (OPTIMIZATION_r13.md).
     val s = winnowFingerprints(docs).repartition(col("fp"))
     val hot = s.groupBy("fp")
       .agg(countDistinct(col("doc_id")).as("df"))

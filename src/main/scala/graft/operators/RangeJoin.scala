@@ -34,15 +34,16 @@ object RangeJoin {
 
   /** Exact floor division for longs (`floor(c / w)` through doubles
     * loses exactness past 2^53; negative coordinates must round toward
-    * -inf, not zero). `c - pmod(c, w)` is exactly divisible, so the
-    * LONG integral division is exact at any magnitude (truncation and
-    * floor agree on exact multiples) — the previous DECIMAL(38,0)
-    * detour allocated a Decimal per row on the join's hot path
-    * (round 14, guide §1.2 per-task work). Caveat: coordinates within
-    * `w` of Long.MinValue would overflow the subtraction; real
-    * day/second coordinates are nowhere near it. */
-  private def floorDiv(c: Column, w: Long): Column =
-    call_function("div", c - pmod(c, lit(w)), lit(w))
+    * -inf, not zero): the LONG truncating division, one lower for a
+    * negative coordinate with a remainder. No intermediate leaves the
+    * long range, so coordinates within `w` of Long.MinValue bucket
+    * without an ANSI overflow error. Long, not DECIMAL(38,0): a Decimal
+    * per row on the join's hot path is the per-task cost round 14
+    * removed (guide §1.2). */
+  private def floorDiv(c: Column, w: Long): Column = {
+    val q = call_function("div", c, lit(w))
+    when(c < 0 && c % w =!= 0, q - 1).otherwise(q)
+  }
 
   /** @param points     side whose `pointCol` (long) falls in the interval
     * @param intervals  side carrying `[loCol, hiCol]` (long, inclusive)
@@ -111,16 +112,27 @@ object RangeJoin {
     // the overlap-start rule in MULTIPLY form: `b == floor(start/w)` ⟺
     // `b·w ≤ start < b·w + w` — long multiply-compares per candidate pair
     // instead of a division chain on the join's hottest expression (the
-    // candidate-pair count is the operator's whole cost). The upper bound
-    // is spelled `start - b·w < w`: `(b+1)·w` leaves the long range for
-    // the last bucket below Long.MaxValue (an ANSI overflow error), while
-    // `start - b·w` lies in [0, w) whenever the first conjunct holds.
+    // candidate-pair count is the operator's whole cost). Bucket b spans
+    // [b·w, (b+1)·w); its start b·w leaves the long range only for the
+    // first bucket (below Long.MinValue), its end (b+1)·w only for the
+    // last (past Long.MaxValue). So a bucket b >= 0 is checked from its
+    // start and a negative one from its end, and each difference is
+    // taken only once its first conjunct holds, when it lies in [0, w)
+    // or [-w, 0): no intermediate leaves the long range.
     val start = greatest(col(leftLo), col(rightLo))
-    val bucketLo = col("__bucket") * bucketWidth
+    val b = col("__bucket")
+    val inStartBucket =
+      when(b >= 0, {
+        val bucketStart = b * bucketWidth
+        bucketStart <= start && start - bucketStart < bucketWidth
+      }).otherwise({
+        val bucketEnd = (b + 1) * bucketWidth
+        start < bucketEnd && start - bucketEnd >= -bucketWidth
+      })
     expand(left, leftLo, leftHi)
       .join(expand(right, rightLo, rightHi), Seq("__bucket"))
       .filter(col(leftLo) <= col(rightHi) && col(rightLo) <= col(leftHi))
-      .filter(bucketLo <= start && start - bucketLo < bucketWidth)
+      .filter(inStartBucket)
       .drop("__bucket")
   }
 

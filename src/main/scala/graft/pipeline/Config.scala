@@ -79,7 +79,6 @@ final class Config private (root: Map[String, Any]) {
     * (`run_pipeline.py --no-validation` ≡ `transformation.enable_* :
     * false` here). */
   def toGraftConfig: GraftConfig = GraftConfig(
-    batchSize = getInt("pipeline.batch_size", 1000),
     qualityThreshold = getDouble("data_quality.quality_threshold", 80.0),
     requiredFields =
       getStrings("data_quality.required_fields", Quality.RequiredFields),

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `src/utils.py`/`tests.py:260-280`): only the keys actual reference code
   * reads are modeled. */
 final case class GraftConfig(
-    batchSize: Int = 1000,
     qualityThreshold: Double = 80.0,
     requiredFields: Seq[String] = Quality.RequiredFields,
     enableValidation: Boolean = true,

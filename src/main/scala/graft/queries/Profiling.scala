@@ -238,7 +238,7 @@ object Profiling {
     // two scalar percentile_approx calls each build their own identical
     // sketch (the sketch state does not depend on the queried quantile,
     // so the values are bit-identical); measured 2x on the sketch pass
-    // at sf0.1 (ProfileProfiling: 1.30 -> 0.69 s)
+    // at sf0.1 (1.30 -> 0.69 s, OPTIMIZATION_r13.md)
     val aggs =
       (numCols ++ strCols).map(c =>
         approx_count_distinct(col(c), rsd = 0.02).as(s"${c}__nd")) ++

@@ -297,6 +297,34 @@ class AdvancedSpec extends SparkSpec {
     }
   }
 
+  test("range joins: a point and spans in the first bucket above Long.MinValue emit one pair") {
+    import graft.operators.RangeJoin
+    import spark.implicits._
+    // everything sits in [Long.MinValue, Long.MinValue + w - 1]; unless w
+    // divides 2^63 the first bucket starts below Long.MinValue, so a floor
+    // division through `c - pmod(c, w)` or a bucket start `b·w` leaves the
+    // long range there (under ANSI an overflow error instead of the pair).
+    // For w = 10 the full span also reaches the second bucket, so the
+    // overlap check must keep the pair in the first bucket only.
+    for (w <- Seq(1L, 8L, 10L)) {
+      val first = Long.MinValue
+      val last = Long.MinValue + w - 1
+      val mid = Long.MinValue + w / 2
+      val hits = RangeJoin.pointInInterval(
+          Seq(("P", mid)).toDF("pid", "p"),
+          Seq(("S", first, last)).toDF("sid", "lo", "hi"),
+          "p", "lo", "hi", w)
+        .select("pid", "sid").as[(String, String)].collect()
+      assert(hits.toSeq == Seq(("P", "S")), s"pointInInterval W=$w: ${hits.mkString(", ")}")
+      val rows = RangeJoin.intervalOverlap(
+          Seq(("L", first, last)).toDF("lid", "llo", "lhi"),
+          Seq(("R", mid, last)).toDF("rid", "rlo", "rhi"),
+          "llo", "lhi", "rlo", "rhi", w)
+        .select("lid", "rid").as[(String, String)].collect()
+      assert(rows.toSeq == Seq(("L", "R")), s"intervalOverlap W=$w: ${rows.mkString(", ")}")
+    }
+  }
+
   test("scd2: intervals chain half-open per key, exactly one current, ties deterministic") {
     import graft.operators.Scd2
     import spark.implicits._

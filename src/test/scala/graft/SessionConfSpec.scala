@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Guards the load-bearing session configuration against refactor drift.
   * The round-12 bench root cause (Spark's 100-entry compiled-codegen
   * cache thrashing a ~200-query session) is fixed by a STATIC conf that
@@ -19,6 +21,27 @@ class SessionConfSpec extends SparkSpec {
     assert(GraftSession.CodegenCacheMaxEntries.toInt >= 4096,
       "the cap must cover the ~2-3k distinct codegen units of a full " +
         "registry sweep with headroom")
+  }
+
+  test("no main-tree file but GraftSession.scala builds a SparkSession by hand") {
+    // the scaladoc promise "every main builds through here": a hand-built
+    // session skips the confs above (q170 7.8 s vs 3.3 s without the
+    // codegen cap), so a dev main's numbers would come from a different
+    // engine configuration than Bench's
+    import java.nio.file.{Files, Path, Paths}
+    val root = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root), s"main source tree not at ${root.toAbsolutePath}")
+    val stream = Files.walk(root)
+    val sources =
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally stream.close()
+    def isFactory(f: Path) = f.getFileName.toString == "GraftSession.scala"
+    assert(sources.exists(isFactory), s"GraftSession.scala not found under $root")
+    val handBuilt = sources.filterNot(isFactory)
+      .filter(f => Files.readString(f).contains("SparkSession.builder"))
+      .map(root.relativize).sortBy(_.toString)
+    assert(handBuilt.isEmpty,
+      s"build the session through GraftSession instead: ${handBuilt.mkString(", ")}")
   }
 
   test("the factory-built session carries the oracle-critical confs") {
