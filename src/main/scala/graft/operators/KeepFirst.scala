@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
   *
   * `tiebreak` must totally order rows within a key group for the pick to
   * be deterministic — callers pass every non-key column
-  * ([[graft.pipeline.Clean.KeepFirstTiebreak]] ++ rest). */
+  * ([[graft.pipeline.Clean.KeepFirstTiebreak]] ++ rest). `descending`
+  * keeps the last row under that order instead (keep-latest; the
+  * storage upsert's merge). */
 object KeepFirst {
 
   private def containsFloat(dt: DataType): Boolean = dt match {
@@ -24,7 +26,8 @@ object KeepFirst {
     case _ => false
   }
 
-  def native(df0: DataFrame, keys: Seq[String], tiebreak: Seq[String]): DataFrame = {
+  def native(df0: DataFrame, keys: Seq[String], tiebreak: Seq[String],
+      descending: Boolean = false): DataFrame = {
     // Column names resolve with the SESSION's resolver (case-insensitive
     // unless spark.sql.caseSensitive) — an exact-case schema lookup would
     // silently skip the float normalization (and the nested-float
@@ -67,6 +70,7 @@ object KeepFirst {
     def attr(n: String) = plan.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"keepFirst: column $n not found"))
     Bridge.ofRows(spark,
-      graft.plans.KeepFirstNode(plan, keyNames.map(attr), tiebreakNames.map(attr)))
+      graft.plans.KeepFirstNode(plan, keyNames.map(attr), tiebreakNames.map(attr),
+        descending))
   }
 }

@@ -29,10 +29,16 @@ final case class GraftConfig(
   *   - cleaning failure is FATAL (`transformation.py:697-701`);
   *   - enrichment / standardization failures are NON-fatal — the stage is
   *     skipped and the previous frame flows on (`transformation.py:710-725`).
+  *     That isolation holds at plan time only: the stages are lazy, so a
+  *     runtime error in them surfaces in, and fails, the storage write.
   *
   * Unlike the reference's eager stage-at-a-time materialization, the
-  * composed stages stay ONE lazy Catalyst plan; only the sinks (store,
-  * metric aggregation) trigger jobs.
+  * composed stages stay ONE lazy Catalyst plan, each part executed once.
+  * A run's actions: the validation query (filling the persisted ingested
+  * frame's cache), the storage write (transforming from that cache and
+  * observing the input/output row counts), the configured exports/report,
+  * and the metrics/telemetry appends. The cleaning, enrichment and
+  * standardization seconds are therefore plan-construction time.
   */
 object Pipeline {
 
@@ -95,95 +101,88 @@ object Pipeline {
     if (ingested.isEmpty) {
       return PipelineReport(runId, success = false, stages.result(), 0L, None, None)
     }
+    // A frame with two consumers is persisted so its plan executes once:
+    // the ingested frame for validation (whose query fills the cache) and
+    // storage, the transformed frame for storage and the exports/report.
+    // The finally also covers the cleaning stage's early return.
+    val persisted = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var current = ingested.get
-
-    // Stage 2: validation (non-fatal: a failed check is RECORDED but the
-    // run continues, pipeline.py:126-129)
     var quality: Option[(Double, String)] = None
-    if (config.enableValidation) {
-      val (q, s2) = timed("validation") {
-        val schemaReport = SchemaCheck.validate(current, config.requiredFields)
-        val m = Quality.metrics(current, config.asOf).collect().head
-        // empty input aggregates to NULL score — getAs[Double] would
-        // silently unbox it to 0.0 and report 'critical' for vacuous data
-        val score = Option(m.getAs[java.lang.Double]("overall_score"))
-          .map(_.doubleValue())
-        (score, Option(m.getAs[String]("quality_level")), schemaReport.valid)
-      }
-      val checked = q match {
-        case Some((scoreOpt, levelOpt, schemaValid)) =>
-          quality = scoreOpt.zip(levelOpt)
-          val problems =
-            (if (schemaValid) Nil else Seq("schema validation failed")) ++
-              (scoreOpt match {
-                case Some(sc) if sc < config.qualityThreshold =>
-                  Seq(f"quality score $sc%.2f below threshold ${config.qualityThreshold}%.1f")
-                case None => Seq("no quality score (empty input)")
-                case _ => Nil
-              })
-          if (problems.isEmpty) s2
-          else s2.copy(success = false, error = Some(problems.mkString("; ")))
-        case None => s2
-      }
-      stages += checked
-    }
-
-    // Stage 3a: cleaning (FATAL on failure)
-    if (config.enableCleaning) {
-      val (cleaned, s3) = timed("cleaning") { Clean(current) }
-      stages += s3
-      if (cleaned.isEmpty) {
-        return PipelineReport(runId, success = false, stages.result(), 0L,
-          quality.map(_._1), quality.map(_._2))
-      }
-      current = cleaned.get
-    }
-
-    // Stage 3b/3c: enrichment, standardization (non-fatal, skip-on-error)
-    if (config.enableEnrichment) {
-      val (enriched, s4) = timed("enrichment") { Enrich(current, config.asOf) }
-      stages += s4
-      enriched.foreach(current = _)
-    }
-    if (config.enableStandardization) {
-      val (std, s5) = timed("standardization") { Standardize(current) }
-      stages += s5
-      std.foreach(current = _)
-    }
-
-    // The transformed frame feeds BOTH the drop-accounting count and the
-    // storage upsert — persist it so the clean/enrich plan executes once,
-    // not once per consumer (at 100 TB each re-execution is a full pass).
-    // unpersist lives in a finally: timed() only catches Exception, so a
-    // Throwable escaping the storage stage must not leak the cached frame
-    // in a long-lived session.
-    current.persist()
     var recordsFailed = 0L
     val (stored, s6) =
       try {
+        // Stage 2: validation (non-fatal: a failed check is RECORDED but the
+        // run continues, pipeline.py:126-129)
+        if (config.enableValidation) {
+          val (q, s2) = timed("validation") {
+            persisted += current.persist() // plans the cache: validation's cost
+            val schemaReport = SchemaCheck.validate(current, config.requiredFields)
+            val m = Quality.metrics(current, config.asOf).collect().head
+            // empty input aggregates to NULL score — getAs[Double] would
+            // silently unbox it to 0.0 and report 'critical' for vacuous data
+            val score = Option(m.getAs[java.lang.Double]("overall_score"))
+              .map(_.doubleValue())
+            (score, Option(m.getAs[String]("quality_level")), schemaReport.valid)
+          }
+          val checked = q match {
+            case Some((scoreOpt, levelOpt, schemaValid)) =>
+              quality = scoreOpt.zip(levelOpt)
+              val problems =
+                (if (schemaValid) Nil else Seq("schema validation failed")) ++
+                  (scoreOpt match {
+                    case Some(sc) if sc < config.qualityThreshold =>
+                      Seq(f"quality score $sc%.2f below threshold ${config.qualityThreshold}%.1f")
+                    case None => Seq("no quality score (empty input)")
+                    case _ => Nil
+                  })
+              if (problems.isEmpty) s2
+              else s2.copy(success = false, error = Some(problems.mkString("; ")))
+            case None => s2
+          }
+          stages += checked
+        }
+
         // Records dropped by clean/dedup (ref records removed counts in its
-        // run telemetry): ingested minus what survived the transform stages.
-        // Counting EXECUTES the lazy clean plan, so a runtime error (e.g. an
-        // ANSI cast failure) can surface here — swallow it into the
-        // stage-failure contract (recordsFailed defaults to 0; the storage
-        // stage below executes the same plan and records the failure), never
-        // propagate an uncaught exception out of run().
-        recordsFailed =
-          if (config.enableCleaning) {
-            try {
-              val nIn = ingested.get.count()
-              val nOut = current.count()
-              math.max(0L, nIn - nOut)
-            } catch { case _: Exception => 0L }
-          } else 0L
+        // run telemetry): ingested minus what survived the transform stages,
+        // both observed inside the storage write — no count job of their own.
+        val (observedIn, countIn) = Store.observedCount(current)
+        current = observedIn
+
+        // Stage 3a: cleaning (FATAL on failure)
+        if (config.enableCleaning) {
+          val (cleaned, s3) = timed("cleaning") { Clean(current) }
+          stages += s3
+          if (cleaned.isEmpty) {
+            return PipelineReport(runId, success = false, stages.result(), 0L,
+              quality.map(_._1), quality.map(_._2))
+          }
+          current = cleaned.get
+        }
+
+        // Stage 3b/3c: enrichment, standardization (non-fatal, skip-on-error)
+        if (config.enableEnrichment) {
+          val (enriched, s4) = timed("enrichment") { Enrich(current, config.asOf) }
+          stages += s4
+          enriched.foreach(current = _)
+        }
+        if (config.enableStandardization) {
+          val (std, s5) = timed("standardization") { Standardize(current) }
+          stages += s5
+          std.foreach(current = _)
+        }
 
         // Stage 4: storage — upsert + optional exports/report + metrics
         // (ref store_all, storage.py:608-651)
+        val (toStore, countOut) = Store.observedCount(current)
         timed("storage") {
+          if (config.exportFormats.nonEmpty || config.summaryReport)
+            persisted += current.persist()
           val n =
             if (config.incrementalStorage)
-              Store.upsertOrdersIncremental(spark, current, s"$outDir/orders")
-            else Store.upsertOrders(spark, current, s"$outDir/orders")
+              Store.upsertOrdersIncremental(spark, toStore, s"$outDir/orders")
+            else Store.upsertOrders(spark, toStore, s"$outDir/orders")
+          // read only once the write succeeded (a failed one leaves partial counts)
+          if (config.enableCleaning) recordsFailed = math.max(0L, countIn() - countOut())
           config.exportFormats.foreach { // pre-validated above
             case "csv" => Store.exportCsv(current, s"$outDir/exports/orders_csv")
             case "json" => Store.exportJson(current, s"$outDir/exports/orders_json")
@@ -200,7 +199,7 @@ object Pipeline {
           }
           n
         }
-      } finally current.unpersist()
+      } finally persisted.foreach(_.unpersist())
     stages += s6
 
     val endTime = java.time.Instant.now().toString

@@ -9,38 +9,45 @@ import org.apache.spark.sql.functions._
   *
   * The reference's SQLite `INSERT OR REPLACE` with per-row loops
   * (`storage.py:167-203`) becomes: union existing ∪ incoming → keep-latest
-  * per key (one hash aggregate with map-side combine) → atomic directory
-  * swap. At real scale the
+  * per key (the native keep-first operator under the reversed order: one
+  * exchange, one sort, a streaming pass) → atomic directory swap. At real
+  * scale the
   * same call-sites swap to Delta/Iceberg `MERGE INTO` — the upsert
   * *semantic* (latest-wins by ingest time, unique `order_id`) is what this
   * module pins down. No per-row driver loops anywhere.
   */
 object Store {
 
-  // keep-latest = max(struct(orderCol, __gen, rest…)) per key: struct
-  // ordering is field-by-field with nulls smallest, so max ≡ a window's
-  // (orderCol DESC NULLS LAST, __gen DESC) pick — but with a map-side
-  // partial combine instead of a full sort of every version. Applied on
-  // FIRST write too: an incoming batch can itself carry duplicate keys,
-  // and the unique-key invariant must hold from the first version.
+  // keep-latest = keep-first under the reversed order: the native
+  // keep-first pass in its descending mode keeps each key's first row
+  // under (orderCol, __gen, rest…) DESC NULLS LAST — the row
+  // max(struct(orderCol, __gen, rest…)) picks (struct fields compare with
+  // nulls smallest) — from one exchange, one sort and a streaming pass.
+  // Applied on FIRST write too: an incoming batch can itself carry
+  // duplicate keys, and the unique-key invariant must hold from the first
+  // version.
   private def keepLatest(df: DataFrame, key: String, orderCol: String): DataFrame = {
-    val outCols = df.columns.filterNot(_ == "__gen")
-    val ordCols =
-      (if (df.columns.contains(orderCol)) Seq(orderCol) else Nil) ++
-        (if (df.columns.contains("__gen")) Seq("__gen") else Nil)
-    val rest = outCols.filterNot(c => c == key || ordCols.contains(c))
-    val packedCols = ordCols ++ rest
-    if (packedCols.isEmpty) df.dropDuplicates(key)
-    else {
-      val packed = struct(packedCols.map(col): _*)
-      df.groupBy(col(key)).agg(max(packed).as("__row"))
-        .select(outCols.toIndexedSeq.map(c =>
-          if (c == key) col(c) else col(s"__row.$c").as(c)): _*)
-    }
+    val ordCols = Seq(orderCol, "__gen").filter(df.columns.contains)
+    val rest = df.columns.toSeq.filterNot(c => c == key || ordCols.contains(c))
+    graft.operators.KeepFirst.native(df, Seq(key), ordCols ++ rest, descending = true)
+      .drop("__gen")
+  }
+
+  /** `df` with a row-count observation attached, and its reader: counted
+    * inside the first action on the returned frame (no job of its own).
+    * Read it only after that action succeeded — a failed one leaves
+    * whatever its tasks had counted. */
+  private[graft] def observedCount(df: DataFrame): (DataFrame, () => Long) = {
+    val rows = org.apache.spark.sql.Observation()
+    (df.observe(rows, count(lit(1)).as("rows")),
+      () => rows.get("rows").asInstanceOf[Long])
   }
 
   /** Latest-wins keyed upsert into a parquet table directory (S7).
-    * `orderCol` decides recency (ties → incoming wins via priority). */
+    * `orderCol` decides recency (ties → incoming wins via priority).
+    *
+    * @return rows in the published table, counted by an observation on
+    *         the merge inside the staging write (no read-back) */
   def upsertOrders(spark: SparkSession, incoming: DataFrame, tablePath: String,
       key: String = "order_id", orderCol: String = "ingested_at"): Long = {
     // a full rewrite of a bucket-partitioned table would flatten __bucket
@@ -49,33 +56,18 @@ object Store {
     if (storedBucketCount(spark, tablePath).isDefined)
       sys.error(s"$tablePath is in incremental (bucket-partitioned) layout; " +
         "use upsertOrdersIncremental")
-    def keepLatest(df: DataFrame): DataFrame =
-      Store.keepLatest(df, key, orderCol)
-    val merged = readTable(spark, tablePath) match {
+    val (merged, written) = observedCount(keepLatest(readTable(spark, tablePath) match {
       case Some(cur) =>
-        keepLatest(cur.withColumn("__gen", lit(0))
+        cur.withColumn("__gen", lit(0))
           .unionByName(incoming.withColumn("__gen", lit(1)),
-            allowMissingColumns = true))
-      case None => keepLatest(incoming)
-    }
+            allowMissingColumns = true)
+      case None => incoming
+    }, key, orderCol))
     // staging write, then swap via backup: the old table is moved aside,
     // not deleted, before the new one is published — a crash between the
     // renames leaves a recoverable __backup instead of no table at all
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(tablePath + "__staging")
-    val backup = new org.apache.hadoop.fs.Path(tablePath + "__backup")
-    val target = new org.apache.hadoop.fs.Path(tablePath)
-    merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    fs.delete(backup, true)
-    if (fs.exists(target) && !fs.rename(target, backup))
-      sys.error(s"upsert swap: could not move $target aside")
-    if (!fs.rename(staging, target)) {
-      if (fs.exists(backup)) fs.rename(backup, target)
-      sys.error(s"upsert swap: could not publish $staging over $target")
-    }
-    fs.delete(backup, true)
-    spark.read.parquet(tablePath).count()
+    publishAtomic(spark, merged, tablePath, "upsert swap")
+    written()
   }
 
   final val UpsertBuckets = 64
@@ -117,8 +109,8 @@ object Store {
     *   2. the CURRENT rows of only those buckets are read back (the
     *      `isin` filter on the partition column prunes at planning time —
     *      untouched buckets are never opened);
-    *   3. keep-latest merges current ∪ incoming per key (same aggregate as
-    *      [[upsertOrders]]);
+    *   3. keep-latest merges current ∪ incoming per key (same operator
+    *      as [[upsertOrders]]);
     *   4. dynamic partition overwrite publishes ONLY the partitions present
     *      in the merged frame.
     *
@@ -136,10 +128,11 @@ object Store {
     * dynamic overwrite commit protocol), matching the reference's
     * per-batch SQLite commits (`storage.py:196`). */
   /** @return rows now live in the partitions this batch touched (= the
-    *         size of the published merge — a partition-PRUNED post-publish
-    *         count; a total-table count here would re-list every file of a
-    *         100 TB table per batch, defeating the pruning this layout
-    *         exists for) */
+    *         size of the published merge — on the first write an
+    *         observation on the merge inside the write, later a
+    *         partition-PRUNED post-publish count; a total-table count here
+    *         would re-list every file of a 100 TB table per batch,
+    *         defeating the pruning this layout exists for) */
   def upsertOrdersIncremental(spark: SparkSession, incoming: DataFrame,
       tablePath: String, key: String = "order_id",
       orderCol: String = "ingested_at", numBuckets: Int = UpsertBuckets): Long = {
@@ -169,15 +162,23 @@ object Store {
     val bucketed = incoming
       .withColumn("__bucket", pmod(hash(col(key)), lit(buckets)))
     if (!exists) {
-      keepLatest(bucketed, key, orderCol).repartition(col("__bucket"))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket")
-        .parquet(tablePath)
+      val (merged, written) = observedCount(keepLatest(bucketed, key, orderCol))
+      writeBuckets(merged, tablePath)
       writeBucketMarker(spark, tablePath, buckets)
-      spark.read.parquet(tablePath).count()
+      written()
     } else mergeIntoBuckets(spark, tablePath, bucketed, None, key, orderCol)
   }
+
+  /** Write a bucketed frame into its `__bucket=` partitions, replacing only
+    * the partitions present in it (dynamic overwrite). It is clustered by
+    * the layout column first: partitionBy splits each task's output per
+    * bucket value, so an unclustered frame (32 shuffle partitions) would
+    * shed up to 32 small files into every bucket it touches; clustering
+    * lands each bucket's rows in one task → one compact file per rewrite. */
+  private def writeBuckets(df: DataFrame, path: String): Unit =
+    df.repartition(col("__bucket")).write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__bucket").parquet(path)
 
   private val PendingClearFile = "_pending_clear"
 
@@ -268,17 +269,7 @@ object Store {
               "directory instead")
         }
         val toClear = touched.filterNot(surviving)
-        // cluster by the layout column before the write: partitionBy
-        // splits each task's output per bucket value, so an unclustered
-        // merged frame (32 shuffle partitions) would shed up to 32 small
-        // files into every touched bucket on every merge. Hash-clustering
-        // on __bucket lands each bucket's rows in one task → one compact
-        // file per rewrite.
-        merged.repartition(col("__bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__bucket")
-          .parquet(tablePath)
+        writeBuckets(merged, tablePath)
         // the marker is written AFTER the publish, never before: a
         // pre-publish marker would let the next merge's repair delete a
         // bucket whose replacement data was never committed — if that
@@ -401,20 +392,10 @@ object Store {
     val rebucketed = spark.read.parquet(tablePath)
       .drop("__bucket")
       .withColumn("__bucket", pmod(hash(col(key)), lit(newBuckets)))
-      .repartition(col("__bucket"))
-    val staging = new org.apache.hadoop.fs.Path(tablePath + "__staging")
-    val backup = new org.apache.hadoop.fs.Path(tablePath + "__backup")
-    rebucketed.write.mode(SaveMode.Overwrite)
-      .partitionBy("__bucket").parquet(staging.toString)
-    writeBucketMarker(spark, staging.toString, newBuckets)
-    fs.delete(backup, true)
-    if (!fs.rename(target, backup))
-      sys.error(s"compact swap: could not move $target aside")
-    if (!fs.rename(staging, target)) {
-      fs.rename(backup, target)
-      sys.error(s"compact swap: could not publish $staging over $target")
+    publishAtomicWith(spark, tablePath, "compact swap") { staging =>
+      writeBuckets(rebucketed, staging)
+      writeBucketMarker(spark, staging, newBuckets)
     }
-    fs.delete(backup, true)
     spark.read.parquet(tablePath).count()
   }
 

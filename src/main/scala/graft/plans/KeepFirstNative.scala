@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, Descending, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -45,13 +45,19 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * aggregate reference in the test tree by KeepFirstNativeSpec, and by
   * the q11/q13 oracles.
   *
+  * Latest mode (`descending`): the tiebreak sorts DESC NULLS LAST, keys
+  * stay ascending, so the pass keeps the row `max(struct(tiebreak…))`
+  * picks — the storage upsert's keep-latest ([[graft.pipeline.Store]]),
+  * pinned against that max-struct form by StoreSpec.
+  *
   * Reference behavior: `drop_duplicates(subset=[key], keep='first')`,
   * `transformation.py:64-73`.
   */
 case class KeepFirstNode(
     child: LogicalPlan,
     keys: Seq[Attribute],
-    tiebreak: Seq[Attribute]) extends UnaryNode {
+    tiebreak: Seq[Attribute],
+    descending: Boolean = false) extends UnaryNode {
   require(keys.nonEmpty, "KeepFirstNode needs at least one key")
   override def output: Seq[Attribute] = child.output
   // every column survives dedup, so none may be pruned from the child;
@@ -64,8 +70,8 @@ case class KeepFirstNode(
 
 object KeepFirstStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case KeepFirstNode(child, keys, tiebreak) =>
-      KeepFirstExec(planLater(child), keys, tiebreak) :: Nil
+    case KeepFirstNode(child, keys, tiebreak, descending) =>
+      KeepFirstExec(planLater(child), keys, tiebreak, descending) :: Nil
     case _ => Nil
   }
 }
@@ -73,7 +79,8 @@ object KeepFirstStrategy extends SparkStrategy {
 case class KeepFirstExec(
     child: SparkPlan,
     keys: Seq[Attribute],
-    tiebreak: Seq[Attribute]) extends UnaryExecNode {
+    tiebreak: Seq[Attribute],
+    descending: Boolean = false) extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
   override def references: AttributeSet = child.outputSet
@@ -86,9 +93,11 @@ case class KeepFirstExec(
     ClusteredDistribution(keys) :: Nil
 
   /** Ascending defaults to NULLS FIRST — the same order as the aggregate
-    * form's struct-min (nulls smallest) and `asc_nulls_first` windows. */
+    * form's struct-min (nulls smallest) and `asc_nulls_first` windows;
+    * Descending to NULLS LAST, the struct-max order. */
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq((keys ++ tiebreak).map(SortOrder(_, Ascending)))
+    Seq(keys.map(SortOrder(_, Ascending)) ++
+      tiebreak.map(SortOrder(_, if (descending) Descending else Ascending)))
 
   // the pass consumes rows in their sorted order and only drops rows, so
   // the child's partitioning and ordering both survive

@@ -3,7 +3,6 @@ package graft
 import graft.operators.KeepFirst
 import graft.pipeline.Clean
 import org.apache.spark.sql.execution.SortExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -69,14 +68,9 @@ class KeepFirstNativeSpec extends SparkSpec {
     val df = Clean.dedupKeepFirst(dirty)
     df.collect()
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import Executions.nodes
     // AQE hides operators inside materialized query stages (leaves to
     // TreeNode.collect), so flatten the whole tree through them
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case o => o.children.flatMap(nodes)
-    })
     val all = nodes(df.queryExecution.executedPlan)
     val s = df.queryExecution.executedPlan.toString
     assert(s.contains("KeepFirst"), s)

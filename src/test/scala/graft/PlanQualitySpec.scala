@@ -46,6 +46,31 @@ class PlanQualitySpec extends SparkSpec {
       s"partition pruning read all $total files for a 2-bucket slice")
   }
 
+  test("upsert merge: keep-latest is the native keep-first pass behind one order_id exchange") {
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = java.nio.file.Files.createTempDirectory("merge_plan").toString + "/orders"
+    def batch(lo: Long, hi: Long) = spark.range(lo, hi)
+      .selectExpr("concat('M-', id) AS order_id", "CAST(id AS DOUBLE) AS price",
+        "timestamp'2024-01-01 00:00:00' AS ingested_at")
+    graft.pipeline.Store.upsertOrders(spark, batch(0, 200), dir)
+    val (_, execs) = Executions.during(spark) {
+      graft.pipeline.Store.upsertOrders(spark, batch(100, 300), dir)
+    }
+    val writes = execs.map(qe => Executions.nodes(qe.executedPlan))
+      .filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
+    assert(writes.size == 1, s"expected one staging write, got ${writes.size}")
+    val ops = writes.head
+    val plan = ops.head.toString
+    assert(ops.exists(_.getClass.getSimpleName == "KeepFirstExec"), plan)
+    assert(!ops.exists(o => o.isInstanceOf[SortAggregateExec] ||
+      o.isInstanceOf[ObjectHashAggregateExec]), s"merge regressed to an aggregate:\n$plan")
+    val byKey = ops.collect { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
+      .filter(_.startsWith("hashpartitioning(order_id#"))
+    assert(byKey.size == 1, s"expected one order_id exchange, got $byKey:\n$plan")
+  }
+
   test("q145: skip-manifest pruning schedules strictly fewer files than the table holds") {
     val (stats, pruned) = graft.ext.Rollup.prunedRangeStats(spark, sf)
     assert(stats.count() > 0)

@@ -12,8 +12,6 @@ class PlansSpec extends SparkSpec {
     // (one sort of d× rows vs two full-width sorts), the aggregate wins for
     // LARGE d because its partial combine collapses duplicates BEFORE the
     // exchange. Prove the collapse with the shuffle-write metrics.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val d = 50
     val keys = 200
@@ -21,12 +19,7 @@ class PlansSpec extends SparkSpec {
     val df = rows.toDF("k", "o", "v").coalesce(4)
     def shuffledRows(out: org.apache.spark.sql.DataFrame): Long = {
       out.collect()
-      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-        case q: QueryStageExec => nodes(q.plan)
-        case o => o.children.flatMap(nodes)
-      })
-      nodes(out.queryExecution.executedPlan).collect {
+      Executions.nodes(out.queryExecution.executedPlan).collect {
         case x: ShuffleExchangeExec => x.metrics("shuffleRecordsWritten").value
       }.sum
     }

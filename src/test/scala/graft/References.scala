@@ -33,6 +33,26 @@ object References {
     }
   }
 
+  /** Keep-latest per key as `max(struct(orderCol, __gen, rest…))`: struct
+    * fields compare with nulls smallest, so the maximum is the first row
+    * under `(orderCol, __gen, rest…) DESC NULLS LAST` — latest arrival,
+    * then the higher generation (`__gen`, incoming over stored), then the
+    * remaining columns. The `__gen` column is dropped from the result.
+    * Pins [[graft.pipeline.Store]]'s keep-latest merge. */
+  def keepLatestAgg(df: DataFrame, key: String = "order_id",
+      orderCol: String = "ingested_at"): DataFrame = {
+    val outCols = df.columns.toSeq.filterNot(_ == "__gen")
+    val ordCols = Seq(orderCol, "__gen").filter(df.columns.contains)
+    val rest = outCols.filterNot(c => c == key || ordCols.contains(c))
+    if (ordCols.isEmpty && rest.isEmpty) df.dropDuplicates(key)
+    else {
+      val packed = struct((ordCols ++ rest).map(col): _*)
+      df.groupBy(col(key)).agg(max(packed).as("__row"))
+        .select(outCols.map(c =>
+          if (c == key) col(c) else col(s"__row.$c").as(c)): _*)
+    }
+  }
+
   /** As-of join by brute force, with the signature of
     * [[graft.operators.AsOfJoin.asof]]: a left-outer equi-join on `key`
     * with `right.rightTime <= left.leftTime`, then per left row the one

@@ -451,6 +451,147 @@ class StoreSpec extends SparkSpec {
       "latest version must win within the first batch")
   }
 
+  private val wideSchema = StructType(Seq(
+    StructField("order_id", StringType), StructField("price", DoubleType),
+    StructField("quantity", IntegerType), StructField("note", StringType),
+    StructField("ingested_at", TimestampType)))
+
+  private def wideDf(rows: Row*) =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), wideSchema)
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  test("keep-latest: both upsert paths match the max-struct reference") {
+    def ts(s: String) = java.sql.Timestamp.valueOf(s"2024-01-0$s 00:00:00")
+    val first = wideDf(
+      Row("A", 1.0, 1, "x", ts("2")), Row("A", 2.0, 2, "y", ts("3")), // later arrival wins
+      Row("B", 3.0, null, null, null), Row("B", 4.0, 1, "z", ts("2")), // null arrival loses
+      Row("C", 5.0, null, "p", ts("2")), Row("C", 5.0, 3, "p", ts("2")), // null quantity loses
+      Row(null, 6.0, 1, "n", ts("2")), Row(null, 7.0, 1, "n", ts("1")), // null key: one group
+      Row("D", 8.0, 1, null, null))
+    val second = wideDf(
+      Row("A", 9.0, 1, "x", ts("3")), // same arrival as stored: incoming wins via __gen
+      Row("B", 1.0, 1, "w", null), // null arrival loses to the stored one
+      Row("D", 2.0, 2, "d", null), // both arrivals null: incoming wins via __gen
+      Row(null, 0.5, null, "n2", ts("2")), // null key, tied arrival: incoming wins
+      Row("E", 1.0, null, null, ts("1")))
+    val expect1 = References.keepLatestAgg(first)
+    val expect2 = References.keepLatestAgg(expect1.withColumn("__gen", lit(0))
+      .unionByName(second.withColumn("__gen", lit(1))))
+    val price = rowSet(expect2).map(r => Option(r(0)) -> r(1)).toMap
+    assert(price == Map(Some("A") -> 9.0, Some("B") -> 4.0, Some("C") -> 5.0,
+      None -> 0.5, Some("D") -> 2.0, Some("E") -> 1.0), "reference drifted")
+    val full = tmp("latest_full") + "/orders"
+    val inc = tmp("latest_inc") + "/orders"
+    Seq(first -> expect1, second -> expect2).zipWithIndex.foreach {
+      case ((batch, expected), i) =>
+        val want = rowSet(expected)
+        val nFull = Store.upsertOrders(spark, batch, full)
+        val nInc = Store.upsertOrdersIncremental(spark, batch, inc, numBuckets = 4)
+        assert(rowSet(spark.read.parquet(full)) == want, s"full rewrite, batch $i")
+        assert(rowSet(Store.readOrdersIncremental(spark, inc)) == want, s"incremental, batch $i")
+        // the returned count is observed in the write, and is the table's
+        assert(nFull == want.size && nFull == spark.read.parquet(full).count())
+        if (i == 0) assert(nInc == want.size && nInc == spark.read.parquet(inc).count())
+    }
+  }
+
+  // posts with one order (API-0003) that cleaning drops for its price,
+  // in a parquet directory so the plans that scan it can be told apart
+  private def postsSource(name: String): (String, org.apache.spark.sql.DataFrame) = {
+    val dir = tmp(name) + "/posts"
+    spark.createDataFrame(
+      java.util.Arrays.asList(Row(1L, 1L, "iPhone post"), Row(2L, 2L, "watch post"),
+        Row(3L, 3L, "plain post")),
+      StructType(Seq(StructField("id", LongType), StructField("userId", LongType),
+        StructField("title", StringType)))).write.parquet(dir)
+    dir -> Ingest.postsToOrders(spark.read.parquet(dir))
+      .withColumn("price", when(col("order_id") === "API-0003", lit(-5.0))
+        .otherwise(col("price")))
+  }
+
+  test("pipeline: one run executes the source scan once; counts come from the write") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val (src, orders) = postsSource("pipe_once")
+    def scansSource(p: SparkPlan) = Executions.nodes(p).exists {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.contains(src))
+      case _ => false
+    }
+    val config = GraftConfig(asOf = "2024-06-01", qualityThreshold = 0.0)
+    val out = tmp("pipe_once_out")
+    val (report, execs) = Executions.during(spark) {
+      Pipeline.run(spark, Seq(orders), out, config)
+    }
+    assert(report.success, report.toString)
+    // a plan scans the files itself, or through a cache it fills: count
+    // the direct scans plus each distinct cache holding the scan
+    val direct = execs.count(qe => scansSource(qe.executedPlan))
+    val caches = execs.flatMap(qe => Executions.nodes(qe.executedPlan).collect {
+      case m: InMemoryTableScanExec if scansSource(m.relation.cachedPlan) =>
+        m.relation.cacheBuilder
+    }).distinct
+    assert(direct + caches.size == 1,
+      s"source scanned by $direct plans directly and through ${caches.size} caches")
+    assert(report.recordsStored == 2 && report.recordsFailed == 1, report.toString)
+    assert(report.recordsStored == spark.read.parquet(s"$out/orders").count())
+    // the counts are observed wherever the write's plan puts them: over the
+    // ingest cache or the source, inside the persisted transformed frame
+    // (exports/report), inside the incremental merge's caches (a second
+    // run into the same table). Bounded: an observation that never reports
+    // would wait forever.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def bounded(c: GraftConfig, dir: String) =
+      Await.result(Future(Pipeline.run(spark, Seq(orders), dir, c)), 3.minutes)
+    Seq(true, false).foreach { validate =>
+      val c = config.copy(enableValidation = validate)
+      val runs = Seq(
+        bounded(c, tmp("pipe_once_plain")),
+        bounded(c.copy(exportFormats = Seq("csv"), summaryReport = true),
+          tmp("pipe_once_exports"))) ++ {
+        val inc = tmp("pipe_once_inc")
+        Seq.fill(2)(bounded(c.copy(incrementalStorage = true), inc))
+      }
+      runs.foreach { r =>
+        assert(r.success && r.recordsStored == 2 && r.recordsFailed == 1,
+          s"validation=$validate: $r")
+      }
+    }
+  }
+
+  test("pipeline: a runtime error in a source row fails storage and publishes nothing") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val (_, orders) = postsSource("pipe_fault")
+    val faulty = orders.withColumn("customer_name",
+      when(col("order_id") === "API-0002", raise_error(lit("injected fault")))
+        .otherwise(col("customer_name")))
+    Seq(true, false).foreach { validate =>
+      val config = GraftConfig(asOf = "2024-06-01", qualityThreshold = 0.0,
+        enableValidation = validate)
+      val out = tmp("pipe_fault_out")
+      assert(Pipeline.run(spark, Seq(orders), out, config).success)
+      val before = rowSet(spark.read.parquet(s"$out/orders"))
+      // bounded: a count read from an observation of the failed write
+      // would wait forever
+      val report = Await.result(Future(Pipeline.run(spark, Seq(faulty), out, config,
+        runId = s"RUN-FAULT-$validate")), 3.minutes)
+      assert(!report.success, report.toString)
+      val storage = report.stages.find(_.stage == "storage").get
+      assert(!storage.success && storage.error.exists(_.contains("injected fault")),
+        storage.toString)
+      assert(report.recordsStored == 0)
+      assert(rowSet(spark.read.parquet(s"$out/orders")) == before)
+      val run = spark.read.parquet(s"$out/pipeline_runs")
+        .filter(col("run_id") === s"RUN-FAULT-$validate").collect()
+      assert(run.map(_.getAs[String]("status")).toSeq == Seq("failed"))
+    }
+  }
+
   test("bucketed tables join without a shuffle exchange") {
     val d = pipeline.OrdersDomain.fromTpch(spark, sf).dropDuplicates("order_id")
     Store.writeBucketed(d.select("order_id", "price", "quantity"),
