@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.{QuerySpec, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite over `documents`: exact (hash-groupBy), n-gram
@@ -109,17 +109,37 @@ object Dedup {
     * O(words²). `hashed` emits the md5 fingerprint instead of the text
     * (for probes that never need the gram itself). */
   private def gramRows(docs: DataFrame, n: Int, outCol: String,
-      hashed: Boolean): DataFrame = {
-    require(n >= 1, s"n-gram width must be >= 1, got $n")
-    val gram = s"concat_ws(' ', slice(w, i, $n))"
-    val gramExpr = if (hashed) s"md5($gram)" else gram
+      hashed: Boolean): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= n)
-      .select(col("doc_id"), explode(array_distinct(
-        expr(s"transform(sequence(1, size(w) - ${n - 1}), i -> $gramExpr)")))
-        .as(outCol))
+      .select(col("doc_id"), explode(gramArray(n, hashed)).as(outCol))
+
+  /** The distinct n-grams of the words column `w` as one array — the
+    * expression [[gramRows]] explodes. Defined only where `w` holds at
+    * least n words. */
+  private def gramArray(n: Int, hashed: Boolean): Column = {
+    require(n >= 1, s"n-gram width must be >= 1, got $n")
+    val gram = s"concat_ws(' ', slice(w, i, $n))"
+    val gramExpr = if (hashed) s"md5($gram)" else gram
+    array_distinct(
+      expr(s"transform(sequence(1, size(w) - ${n - 1}), i -> $gramExpr)"))
   }
+
+  /** (doc_id, fingerprint, shingles): the md5 content fingerprint (null
+    * for null text) and the distinct [[ShingleWidth]]-gram shingles as
+    * an array — empty below [[ShingleWidth]] words, the same drop-short
+    * rule as [[shingleRows]]. What admission knows about a document.
+    * The `carry` columns of `docs` pass through unchanged. */
+  private[ext] def admitFeatures(docs: DataFrame, carry: String*): DataFrame =
+    docs
+      .select(Seq(col("doc_id").cast("long").as("doc_id"),
+        md5(col("text")).as("fingerprint"),
+        split(col("text"), " ").as("w")) ++ carry.map(col): _*)
+      .select(Seq(col("doc_id"), col("fingerprint"),
+        when(size(col("w")) >= ShingleWidth, gramArray(ShingleWidth, hashed = false))
+          .otherwise(array().cast("array<string>")).as("shingles")) ++
+        carry.map(col): _*)
 
   /** Word-shingle width for the near-dup detector family. Part of
     * [[PairsCodeToken]]: changing it invalidates every cached pair
@@ -1845,73 +1865,104 @@ object Dedup {
 
   // ---- Incremental batch dedup -----------------------------------------
 
-  /** Incremental dedup: admit a NEW batch of docs against the existing
+  /** Incremental dedup: admit a NEW batch of docs against an indexed
     * corpus — exact-duplicate check on the content fingerprint (vs the
     * corpus AND within the batch itself: the first occurrence of a
     * batch-internal copy wins, later ones reject — without this, two
     * identical docs arriving in one increment would both be admitted)
-    * plus a near-duplicate check on shared 3-gram shingles (Jaccard vs
-    * the corpus side; batch-internal NEAR-dups are left to the next
-    * full-corpus clustering pass — q60 — since admitting at most one of
-    * them is a policy, not an invariant). The decision the ingest path
-    * makes per batch, without ever re-deduplicating the corpus itself.
+    * plus a near-duplicate check on shared 3-gram shingles (exact Jaccard
+    * ≥ `minJaccard` vs the corpus side; batch-internal NEAR-dups are left
+    * to the next full-corpus clustering pass — q60 — since admitting at
+    * most one of them is a policy, not an invariant). The decision the
+    * ingest path makes per batch, without ever re-deduplicating the
+    * corpus itself. Null text has a null fingerprint, and null matches
+    * null on both sides: within the batch (one keeper among null-text
+    * docs) and against the corpus (a corpus null-text doc rejects the
+    * batch's) — so a replayed null-text doc rejects like any other.
     *
-    * Scale shape: the batch is small (one ingest increment) and the corpus
-    * is indexed — at scale the fingerprint and shingle frames are
-    * pre-materialized index tables, so each increment costs a
-    * batch-fingerprint broadcast anti-probe, a batch-sized keeper window,
-    * and a shingle equi-join whose left side is batch-sized. Nothing scans
-    * or shuffles the corpus text. */
-  def admitBatch(corpus: DataFrame, batch: DataFrame,
+    * The corpus side is a [[CorpusIndex]]: q71 derives it from text
+    * ([[CorpusIndex.of]]), `Streaming.corpusAdmitStream` reads the one
+    * maintained beside its corpus ([[CorpusIndex.maintained]]). No corpus
+    * text is touched here either way.
+    *
+    * Cost: ONE job collects the batch side — doc_id, fingerprint and
+    * shingle array per doc, at most [[MaxAdmitBatchRows]] — and the
+    * in-batch keeper is taken on the driver. The returned frame probes
+    * the index with that side as two broadcast local relations
+    * (fingerprints, shingle rows), aggregates the shingle hits per
+    * (batch doc, corpus doc) and folds everything into one row per
+    * batch doc_id: the corpus is scanned and hash-probed, never
+    * shuffled on a join key, and everything after the probe is
+    * batch-pair-sized. doc_id is read as a long; a batch carrying the
+    * same doc_id twice gets one decision row for it. */
+  def admitBatch(index: CorpusIndex, batch: DataFrame,
+      minJaccard: Double): DataFrame =
+    admitBatch(index, admitSide(batch), minJaccard)
+
+  /** Driver-side bound on the batch side [[admitBatch]] collects (one row
+    * per batch document). A micro-batch is small by design; one past the
+    * bound fails LOUDLY instead of filling the driver — split it
+    * (`maxFilesPerTrigger`) instead. */
+  final val MaxAdmitBatchRows: Int = 100000
+
+  /** One batch document as admission sees it (see [[admitFeatures]]). */
+  private[graft] final case class AdmitDoc(docId: Long, fingerprint: String,
+      shingles: Seq[String])
+
+  /** The batch side of [[admitBatch]], collected in one job and bounded
+    * by [[MaxAdmitBatchRows]]. */
+  private[graft] def admitSide(batch: DataFrame): Seq[AdmitDoc] = {
+    val rows = admitFeatures(batch).limit(MaxAdmitBatchRows + 1).collect()
+    if (rows.length > MaxAdmitBatchRows)
+      sys.error(s"admitBatch: the batch holds more than $MaxAdmitBatchRows " +
+        "documents — the batch side is collected to the driver; split the " +
+        "batch (see MaxAdmitBatchRows)")
+    rows.toSeq.map { r =>
+      if (r.isNullAt(0)) sys.error("admitBatch: a batch document has a null doc_id")
+      AdmitDoc(r.getLong(0), r.getString(1), r.getSeq[String](2))
+    }
+  }
+
+  /** [[admitBatch]] over an already collected batch side. */
+  private[graft] def admitBatch(index: CorpusIndex, side: Seq[AdmitDoc],
       minJaccard: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the batch side is ALWAYS the broadcast build side: the corpus (and
-    // at scale its pre-materialized fingerprint/shingle index tables) is
-    // only scanned and hash-probed, never shuffled on a join key. A plain
-    // batch-LEFT-join-corpus would force the huge side to shuffle, so the
-    // corpus-hit test is an inner probe (corpus ⨝ broadcast(batch))
-    // re-joined to the batch
-    val batchFp = batch.select(col("doc_id"), md5(col("text")).as("fingerprint"))
-      .withColumn("batch_keeper",
-        min(col("doc_id")).over(Window.partitionBy("fingerprint")))
-    val corpusHits = corpus.select(md5(col("text")).as("fingerprint"))
-      .join(broadcast(batchFp.select("fingerprint").distinct()), "fingerprint")
-      .distinct().withColumn("corpus_hit", lit(1))
-    val exact = batchFp.join(broadcast(corpusHits), Seq("fingerprint"), "left")
-      .withColumn("exact_hit",
-        when(col("corpus_hit").isNotNull
-          || col("doc_id") =!= col("batch_keeper"), lit(1)))
-    val bsh = shingleRows(batch)
-    val csh = shingleRows(corpus)
-    val bsizes = bsh.groupBy("doc_id").agg(count(lit(1)).as("n_b"))
-    val csizes = csh.groupBy("doc_id").agg(count(lit(1)).as("n_c"))
-    // same probe shape for shingles: corpus-side stream, batch broadcast;
-    // everything after the probe is batch-pair-sized
-    val common = csh.toDF("c_doc", "shingle")
-      .join(broadcast(bsh.toDF("b_doc", "shingle")), "shingle")
-      .groupBy("b_doc", "c_doc").agg(count(lit(1)).as("n_common"))
-    // corpus-side shingle counts are looked up only for the hit docs
-    // (batch-bounded), again as a probe — joining the full per-doc count
-    // index directly would shuffle it corpus-wide. The probe re-evaluates
-    // the `common` subtree (Spark does not dedupe identical subtrees):
-    // a DELIBERATE trade — two shuffle-free scans of the corpus index
-    // beat one corpus-wide shuffle of it, and a cache can't live inside
-    // a lazily-returned operator without leaking for the session
-    val cHitSizes = csizes.toDF("c_doc", "n_c")
-      .join(broadcast(common.select("c_doc").distinct()), "c_doc")
-    val near = common
-      .join(broadcast(bsizes.toDF("b_doc", "n_b")), "b_doc")
-      .join(broadcast(cHitSizes), "c_doc")
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val spark = index.fingerprints.sparkSession
+    def local(rows: Seq[Row], fields: (String, DataType)*): DataFrame =
+      spark.createDataFrame(rows.asJava,
+        StructType(fields.map { case (n, t) => StructField(n, t) }))
+    // Option keys: null fingerprints form one group, as in a window
+    val keeper = side.groupBy(d => Option(d.fingerprint))
+      .map { case (fp, ds) => fp -> ds.map(_.docId).min }
+    val own = local(side.map(d =>
+        Row(d.docId, if (d.docId != keeper(Option(d.fingerprint))) 1 else 0, 0L)),
+      "doc_id" -> LongType, "hit" -> IntegerType, "near" -> LongType)
+    val bfp = local(side.map(d => Row(d.fingerprint, d.docId)),
+      "b_fp" -> StringType, "doc_id" -> LongType)
+    val exact = index.fingerprints.select("fingerprint")
+      .join(broadcast(bfp), col("fingerprint") <=> col("b_fp"))
+      .select(col("doc_id"), lit(1).as("hit"), lit(0L).as("near"))
+    val bsh = local(side.flatMap(d =>
+        d.shingles.map(s => Row(d.docId, s, d.shingles.size))),
+      "b_doc" -> LongType, "shingle" -> StringType, "n_b" -> IntegerType)
+    val near = index.shingles
+      .select(col("doc_id").as("c_doc"), col("shingle"),
+        col("n_shingles").as("n_c"))
+      .join(broadcast(bsh), "shingle")
+      .groupBy("b_doc", "c_doc", "n_b", "n_c")
+      .agg(count(lit(1)).as("n_common"))
       .filter(col("n_common").cast("double")
         / (col("n_b") + col("n_c") - col("n_common")) >= minJaccard)
-      .groupBy(col("b_doc").as("doc_id"))
-      .agg(count(lit(1)).as("n_neardup"))
-    exact.join(near, Seq("doc_id"), "left")
+      .select(col("b_doc").as("doc_id"), lit(0).as("hit"), lit(1L).as("near"))
+    own.unionByName(exact).unionByName(near)
+      .groupBy("doc_id")
+      .agg(max("hit").as("hit"), sum("near").as("n_neardup"))
       .select(col("doc_id"),
-        col("exact_hit").isNotNull.as("is_exact_dup"),
-        coalesce(col("n_neardup"), lit(0L)).as("n_neardup"),
-        when(col("exact_hit").isNotNull, "reject_exact")
-          .when(coalesce(col("n_neardup"), lit(0L)) > 0, "reject_neardup")
+        (col("hit") === 1).as("is_exact_dup"),
+        col("n_neardup"),
+        when(col("hit") === 1, "reject_exact")
+          .when(col("n_neardup") > 0, "reject_neardup")
           .otherwise("admit").as("decision"))
   }
 
@@ -1923,7 +1974,7 @@ object Dedup {
       |  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 7),
       |corpus AS (
       |  SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 7),
-      |cfp AS (SELECT DISTINCT md5(text) AS fingerprint FROM corpus),
+      |cfp AS (SELECT DISTINCT md5(text) AS fingerprint, 1 AS hit FROM corpus),
       |bsh AS (
       |  SELECT DISTINCT doc_id, shingle FROM (
       |    SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
@@ -1952,19 +2003,19 @@ object Dedup {
       |    min(doc_id) OVER (PARTITION BY md5(text)) AS batch_keeper
       |  FROM batch)
       |SELECT b.doc_id,
-      |  (cfp.fingerprint IS NOT NULL OR b.doc_id <> b.batch_keeper) AS is_exact_dup,
+      |  (cfp.hit IS NOT NULL OR b.doc_id <> b.batch_keeper) AS is_exact_dup,
       |  CAST(coalesce(near.n_neardup, 0) AS BIGINT) AS n_neardup,
-      |  CASE WHEN cfp.fingerprint IS NOT NULL OR b.doc_id <> b.batch_keeper
+      |  CASE WHEN cfp.hit IS NOT NULL OR b.doc_id <> b.batch_keeper
       |         THEN 'reject_exact'
       |       WHEN coalesce(near.n_neardup, 0) > 0 THEN 'reject_neardup'
       |       ELSE 'admit' END AS decision
       |FROM bfp b
-      |LEFT JOIN cfp ON b.fingerprint = cfp.fingerprint
+      |LEFT JOIN cfp ON b.fingerprint IS NOT DISTINCT FROM cfp.fingerprint
       |LEFT JOIN near ON near.doc_id = b.doc_id
       |ORDER BY b.doc_id""".stripMargin) { (s, dir) =>
     val d = Tables.documents(s, dir)
     admitBatch(
-      d.filter(col("doc_id") % 10 =!= 7),
+      CorpusIndex.of(d.filter(col("doc_id") % 10 =!= 7)),
       d.filter(col("doc_id") % 10 === 7),
       minJaccard = 0.5)
       .orderBy("doc_id")
@@ -2524,4 +2575,165 @@ object Dedup {
     q110BoilerplateSpans, q128DupSpanProfile, q190DetectorKappa,
     q197BandLoad, q199DupMass, q200DedupYield, q201MinhashCalibration,
     q202SourceDedupGain)
+}
+
+/** The corpus side of [[Dedup.admitBatch]]: `fingerprints`
+  * (doc_id, fingerprint) — the md5 content digest, null for null text —
+  * and `shingles` (doc_id, shingle, n_shingles) — one row per distinct
+  * [[Dedup.ShingleWidth]]-gram shingle, `n_shingles` the doc's count of
+  * them (the Jaccard denominator, so the probe needs no size table).
+  * Docs below [[Dedup.ShingleWidth]] words have no shingle rows. */
+final case class CorpusIndex(fingerprints: DataFrame, shingles: DataFrame)
+
+/** Builds the index from text ([[of]]) or keeps one beside a corpus
+  * ([[maintained]]).
+  *
+  * Maintained layout: a corpus directory `c` of flat parquet files keeps
+  * its index in `c/_admit_index/{fingerprints,shingles}`. The `_` prefix
+  * hides it from Spark's file listing and from `*.parquet` globs over
+  * the corpus, and the index moves or is deleted together with it. Each corpus
+  * data file is covered by one `batch=<token>` partition in each frame,
+  * the token derived from the file name ([[fileToken]]), committed
+  * through [[graft.pipeline.Store.commitBatchPartition]] (hidden staging,
+  * one rename), so re-indexing a file replaces its partition instead of
+  * adding to it. A file counts as covered when BOTH frames hold its
+  * partition; the frames are committed fingerprints first, so a crash
+  * between the two leaves the file uncovered and it is indexed again. */
+object CorpusIndex {
+  import graft.pipeline.Store
+  import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.types._
+
+  /** Index directory inside a corpus directory. */
+  final val Dir = "_admit_index"
+
+  private val FingerprintSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("fingerprint", StringType)))
+  private val ShingleSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("shingle", StringType),
+    StructField("n_shingles", IntegerType)))
+
+  /** The index of `docs` (doc_id, text), derived from the text. */
+  def of(docs: DataFrame): CorpusIndex =
+    fromFeatures(Dedup.admitFeatures(docs))
+
+  /** Index frames from [[Dedup.admitFeatures]] rows (extra columns are
+    * carried, e.g. the source file name). */
+  private def fromFeatures(f: DataFrame): CorpusIndex = {
+    val keep = f.columns.filterNot(Set("fingerprint", "shingles")).map(col).toSeq
+    CorpusIndex(f.select(keep :+ col("fingerprint"): _*),
+      f.filter(size(col("shingles")) > 0)
+        .select(keep ++ Seq(explode(col("shingles")).as("shingle"),
+          size(col("shingles")).as("n_shingles")): _*))
+  }
+
+  /** The partition token of a corpus data file: 16 hex chars of the md5
+    * of its name. */
+  private[graft] def fileToken(name: String): String =
+    CorpusCache.md5Hex(name).take(16)
+
+  private def frameDirs(corpusPath: String): Seq[String] =
+    Seq(s"$corpusPath/$Dir/fingerprints", s"$corpusPath/$Dir/shingles")
+
+  /** token → path of every data file of the corpus (one listing). A
+    * non-hidden subdirectory fails loudly: the index covers flat files
+    * only, and a partitioned corpus would be read without being indexed. */
+  private def dataFiles(fs: FileSystem, corpusPath: String): Map[String, Path] = {
+    val root = new Path(corpusPath)
+    if (!fs.exists(root)) Map.empty
+    else fs.listStatus(root).toSeq
+      .filterNot(st => Seq("_", ".").exists(st.getPath.getName.startsWith))
+      .map { st =>
+        if (st.isDirectory) sys.error(s"corpus index: $corpusPath holds the " +
+          s"directory ${st.getPath.getName}; only a flat corpus of parquet " +
+          "files can be indexed")
+        fileToken(st.getPath.getName) -> st.getPath
+      }.toMap
+  }
+
+  private def partitionTokens(fs: FileSystem, dir: String): Set[String] = {
+    val p = new Path(dir)
+    if (!fs.exists(p)) Set.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=")).toSet
+  }
+
+  /** The maintained index of the corpus at `corpusPath`, converged with
+    * its data files first. Two directory listings, corpus files against
+    * index partitions, find the gap: partitions whose file is gone are
+    * deleted, and every uncovered file (a corpus seeded outside the
+    * admission stream, or an append whose index commit crashed) is
+    * indexed from its text in ONE read. When nothing is missing this
+    * reads no corpus text and runs no job. A missing corpus yields an
+    * empty index. */
+  def maintained(spark: SparkSession, corpusPath: String): CorpusIndex = {
+    val fs = new Path(corpusPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = frameDirs(corpusPath)
+    dirs.foreach(Store.sweepBatchLeftovers(spark, _))
+    val files = dataFiles(fs, corpusPath)
+    val parts = dirs.map(partitionTokens(fs, _))
+    for ((dir, ts) <- dirs.zip(parts); t <- ts if !files.contains(t))
+      fs.delete(new Path(dir, s"batch=$t"), true)
+    val gap = files.keySet -- parts.reduce(_ intersect _)
+    if (gap.nonEmpty) indexFiles(spark, corpusPath, gap.toSeq.sorted.map(files))
+    // converged: the partitions are exactly the files' tokens
+    def read(dir: String, schema: StructType) =
+      if (files.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.schema(schema.add("batch", StringType)).parquet(dir)
+        .drop("batch")
+    CorpusIndex(read(dirs(0), FingerprintSchema), read(dirs(1), ShingleSchema))
+  }
+
+  /** Index the given corpus files from their text in one read: the
+    * features are computed once (persisted) and committed per file. */
+  private def indexFiles(spark: SparkSession, corpusPath: String,
+      files: Seq[Path]): Unit = {
+    val features = Dedup.admitFeatures(
+        spark.read.parquet(files.map(_.toString): _*)
+          .withColumn("file", col("_metadata.file_name")),
+        "file").persist()
+    try {
+      val idx = fromFeatures(features)
+      files.map(_.getName).foreach { f =>
+        commit(spark, corpusPath, fileToken(f),
+          idx.fingerprints.filter(col("file") === f).drop("file"),
+          idx.shingles.filter(col("file") === f).drop("file"))
+      }
+    } finally { features.unpersist(); () }
+  }
+
+  /** Commit one corpus file's index partitions, fingerprints first, each
+    * as one file like the corpus file it covers (a local relation would
+    * otherwise split into a file per core). */
+  private def commit(spark: SparkSession, corpusPath: String, token: String,
+      fingerprints: DataFrame, shingles: DataFrame): Unit = {
+    val Seq(fpDir, shDir) = frameDirs(corpusPath)
+    Store.commitBatchPartition(spark, fpDir, token, fingerprints.coalesce(1))
+    Store.commitBatchPartition(spark, shDir, token, shingles.coalesce(1))
+  }
+
+  /** Append admitted rows to the corpus and index them from their
+    * already collected features, reading no text: the rows are written
+    * as one file, and that file's partitions are committed from `docs`.
+    * If the write leaves other than exactly one new file (e.g. a
+    * `maxRecordsPerFile` split), the new files stay uncovered and the
+    * next [[maintained]] indexes them from text. */
+  private[graft] def appendAdmitted(spark: SparkSession, corpusPath: String,
+      rows: DataFrame, docs: Seq[Dedup.AdmitDoc]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val fs = new Path(corpusPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = dataFiles(fs, corpusPath).keySet
+    rows.coalesce(1).write.mode("append").parquet(corpusPath)
+    val added = dataFiles(fs, corpusPath).keySet -- before
+    if (added.size == 1) {
+      def local(rs: Seq[Row], schema: StructType) =
+        spark.createDataFrame(rs.asJava, schema)
+      commit(spark, corpusPath, added.head,
+        local(docs.map(d => Row(d.docId, d.fingerprint)), FingerprintSchema),
+        local(docs.flatMap(d => d.shingles.map(s =>
+          Row(d.docId, s, d.shingles.size))), ShingleSchema))
+    }
+  }
 }

@@ -128,11 +128,8 @@ object Store {
     * dynamic overwrite commit protocol), matching the reference's
     * per-batch SQLite commits (`storage.py:196`). */
   /** @return rows now live in the partitions this batch touched (= the
-    *         size of the published merge — on the first write an
-    *         observation on the merge inside the write, later a
-    *         partition-PRUNED post-publish count; a total-table count here
-    *         would re-list every file of a 100 TB table per batch,
-    *         defeating the pruning this layout exists for) */
+    *         size of the published merge, counted by an observation on
+    *         the merge inside the write — no read-back) */
   def upsertOrdersIncremental(spark: SparkSession, incoming: DataFrame,
       tablePath: String, key: String = "order_id",
       orderCol: String = "ingested_at", numBuckets: Int = UpsertBuckets): Long = {
@@ -269,7 +266,10 @@ object Store {
               "directory instead")
         }
         val toClear = touched.filterNot(surviving)
-        writeBuckets(merged, tablePath)
+        // an empty merge rewrites no partition: skip the write (and its
+        // observation, which an empty plan may never report)
+        val (counted, written) = observedCount(merged)
+        if (surviving.nonEmpty) writeBuckets(counted, tablePath)
         // the marker is written AFTER the publish, never before: a
         // pre-publish marker would let the next merge's repair delete a
         // bucket whose replacement data was never committed — if that
@@ -290,8 +290,9 @@ object Store {
           }
           fs.delete(new org.apache.hadoop.fs.Path(tablePath, PendingClearFile), false)
         }
-        spark.read.parquet(tablePath)
-          .filter(col("__bucket").isin(touched: _*)).count()
+        // the touched partitions now hold exactly the merge: the
+        // surviving buckets were rewritten from it, the rest cleared
+        if (surviving.isEmpty) 0L else written()
       } finally merged.unpersist()
     } finally incoming.unpersist()
   }
@@ -372,8 +373,8 @@ object Store {
     * the next [[upsertOrdersIncremental]]/[[applyDelta]] reads the new
     * modulus from the marker.
     *
-    * @return rows in the compacted table (a full-table count — fine here:
-    *         compaction is itself a full rewrite, not a per-batch path) */
+    * @return rows in the compacted table, counted by an observation
+    *         inside the rewrite (read only after the publish succeeded) */
   def compactBuckets(spark: SparkSession, tablePath: String,
       targetFileBytes: Long = 128L << 20, key: String = "order_id"): Long = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
@@ -389,14 +390,14 @@ object Store {
       .map(d => fs.getContentSummary(d.getPath).getLength).sum
     val newBuckets = math.max(1L,
       (dataBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val rebucketed = spark.read.parquet(tablePath)
+    val (rebucketed, written) = observedCount(spark.read.parquet(tablePath)
       .drop("__bucket")
-      .withColumn("__bucket", pmod(hash(col(key)), lit(newBuckets)))
+      .withColumn("__bucket", pmod(hash(col(key)), lit(newBuckets))))
     publishAtomicWith(spark, tablePath, "compact swap") { staging =>
       writeBuckets(rebucketed, staging)
       writeBucketMarker(spark, staging, newBuckets)
     }
-    spark.read.parquet(tablePath).count()
+    written()
   }
 
   /** Read the published table; if the target directory is absent but a

@@ -111,24 +111,27 @@ object Streaming {
   /** Streaming corpus admission — the streaming twin of the q71 batch
     * admit: each micro-batch of documents is tested against the CURRENT
     * admitted corpus (exact fingerprint + near-dup shingle probes via
-    * [[graft.ext.Dedup.admitBatch]], the batch always the broadcast side
-    * so the corpus is never shuffled) and only `admit` decisions append.
-    * Dedup state lives in the corpus TABLE, not in stream state: a
+    * [[graft.ext.Dedup.admitBatch]]) and only `admit` decisions append.
+    * Dedup state lives beside the corpus TABLE, not in stream state: the
+    * corpus keeps a maintained fingerprint/shingle index in a hidden
+    * directory inside it ([[graft.ext.CorpusIndex.maintained]]), and a
     * replayed batch finds its own docs already admitted and rejects them
-    * as exact duplicates, which is what makes at-least-once foreachBatch
-    * delivery idempotent here — the same state-in-the-table rule as
+    * as exact duplicates — which is what makes at-least-once foreachBatch
+    * delivery idempotent here, the same state-in-the-table rule as
     * [[upsertStream]], and the unbounded-keys answer to
-    * `dropDuplicates`' grow-forever stream state (a fingerprint index
-    * table scales with the corpus, not with executor memory).
+    * `dropDuplicates`' grow-forever stream state (the index scales with
+    * the corpus, not with executor memory).
     *
-    * Per-batch cost, stated honestly: each micro-batch re-derives the
-    * corpus-side fingerprints and shingles from the TEXT table — O(corpus)
-    * scan-local work per batch (never a shuffle; the probes stay
-    * batch-broadcast). Fine at gate scale; a 100 TB deployment
-    * materializes the fingerprint/shingle index tables once and APPENDS
-    * each admitted batch's rows to them (the admitBatch probe shape is
-    * unchanged — its inputs just become the index tables), making the
-    * per-batch cost O(batch + index-scan-without-text). */
+    * Per-batch cost: two directory listings converge the index with the
+    * corpus files (a seed corpus written outside the stream, or an
+    * append whose index commit crashed, is indexed from text once, in one
+    * read); one job collects the batch side (doc_id, fingerprint,
+    * shingles — bounded by [[graft.ext.Dedup.MaxAdmitBatchRows]]); the
+    * probe scans the index, never the corpus text, with the batch side
+    * as broadcast local relations; the admitted rows append as one file
+    * whose index partitions are committed from the collected features.
+    * What still grows with the corpus is the index scan itself (no
+    * prefix filter prunes it). */
   def corpusAdmitStream(docs: DataFrame, corpusPath: String,
       checkpoint: String, minJaccard: Double = 0.5): StreamingQuery =
     docs.writeStream
@@ -136,24 +139,19 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch0: DataFrame, _: Long) =>
         val spark = batch0.sparkSession
-        import spark.implicits._
-        // persist: the batch is both the admission probe and the carried
-        // payload of the admitted join — unpersisted, the source re-reads
-        // and the probe's shingle expressions re-run per consumer
+        // persist: the batch is read by the batch-side collect and again
+        // by the admitted append
         val batch = batch0.persist()
         try {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            spark.sparkContext.hadoopConfiguration)
-          val corpus =
-            if (fs.exists(new org.apache.hadoop.fs.Path(corpusPath)))
-              spark.read.parquet(corpusPath).select("doc_id", "text")
-            else Seq.empty[(Long, String)].toDF("doc_id", "text")
-          val admitted = batch.join(
-            graft.ext.Dedup.admitBatch(corpus, batch.select("doc_id", "text"),
-                minJaccard)
-              .filter(col("decision") === "admit").select("doc_id"),
-            "doc_id")
-          admitted.write.mode("append").parquet(corpusPath)
+          val index = graft.ext.CorpusIndex.maintained(spark, corpusPath)
+          val side = graft.ext.Dedup.admitSide(batch)
+          val admitted = graft.ext.Dedup.admitBatch(index, side, minJaccard)
+            .filter(col("decision") === "admit").select("doc_id")
+            .collect().map(_.getLong(0)).toSet
+          if (admitted.nonEmpty)
+            graft.ext.CorpusIndex.appendAdmitted(spark, corpusPath,
+              batch.filter(col("doc_id").isInCollection(admitted)),
+              side.filter(d => admitted(d.docId)))
         } finally { batch.unpersist(); () }
         ()
       }
@@ -167,11 +165,12 @@ object Streaming {
     * budget of any indexed row, or (c) has a smaller-id near neighbor
     * inside its own batch (greedy keep-first, the [[corpusAdmitStream]]
     * batch-internal rule). Admitted rows append to `mediaPath` and their
-    * hashes to the index — so unlike corpusAdmitStream (which re-derives
-    * corpus fingerprints from text per batch, documented as the gate-scale
-    * simplification), the dedup state here IS the materialized index from
-    * the start: per-batch cost O(batch + hash-index scan), the amortized
-    * shape that doc promises for 100 TB. Replay idempotency: a
+    * hashes to the index — like corpusAdmitStream's maintained corpus
+    * index, the dedup state here IS a materialized index: per-batch cost
+    * O(batch + hash-index scan). The difference is where the index lives
+    * and what keeps it: here a separate `indexPath` appended by the
+    * stream only, there a hidden directory inside the corpus converged
+    * with the corpus files on every batch. Replay idempotency: a
     * re-delivered batch hits rule (a) on its own admitted rows — nothing
     * appends twice. */
   def mediaAdmitStream(media: DataFrame, mediaPath: String, indexPath: String,

@@ -1334,7 +1334,7 @@ class ExtSpec extends SparkSpec {
       27L -> "z1 z2 z3 z4 z5 z6 z7 EXTRA", // near-copy of doc 2
       37L -> "q1 q2 q3 q4 q5 q6 q7 q8") // fresh
     val out = Dedup.admitBatch(
-      df.filter(col("doc_id") % 10 =!= 7),
+      graft.ext.CorpusIndex.of(df.filter(col("doc_id") % 10 =!= 7)),
       df.filter(col("doc_id") % 10 === 7), minJaccard = 0.5)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("decision")).toMap
     assert(out == Map(17L -> "reject_exact", 27L -> "reject_neardup", 37L -> "admit"))
@@ -1346,7 +1346,7 @@ class ExtSpec extends SparkSpec {
       47L -> "n1 n2 n3 n4 n5 n6",
       57L -> "n1 n2 n3 n4 n5 n6") // verbatim copy of 47 INSIDE the batch
     val out = Dedup.admitBatch(
-      df.filter(col("doc_id") % 10 =!= 7),
+      graft.ext.CorpusIndex.of(df.filter(col("doc_id") % 10 =!= 7)),
       df.filter(col("doc_id") % 10 === 7), minJaccard = 0.5)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("decision")).toMap
     assert(out(47L) == "admit", "first occurrence must win")

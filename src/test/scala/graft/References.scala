@@ -75,4 +75,50 @@ object References {
       .filter(col("__rn") === 1)
       .select((left.columns.toSeq ++ pairs.map(_._2)).map(col): _*)
   }
+
+  /** Batch admission derived from the corpus TEXT on every call, with
+    * the signature of [[graft.ext.Dedup.admitBatch]] but a text corpus
+    * (doc_id, text) in place of its index: fingerprints and shingles are
+    * re-derived from both sides, the batch probes the corpus through
+    * broadcast hash joins, and the in-batch keeper is a window. Null
+    * fingerprints match null fingerprints (null text is one content),
+    * within the batch and against the corpus. The differential for the
+    * index probe: decisions must agree row for row. */
+  def admitBatchText(corpus: DataFrame, batch: DataFrame,
+      minJaccard: Double): DataFrame = {
+    import graft.ext.Dedup.shingleRows
+    val batchFp = batch.select(col("doc_id"), md5(col("text")).as("fingerprint"))
+      .withColumn("batch_keeper",
+        min(col("doc_id")).over(Window.partitionBy("fingerprint")))
+    val bfps = batchFp.select(col("fingerprint").as("b_fp")).distinct()
+    val corpusHits = corpus.select(md5(col("text")).as("c_fp"))
+      .join(broadcast(bfps), col("c_fp") <=> col("b_fp"))
+      .select(col("b_fp")).distinct().withColumn("corpus_hit", lit(1))
+    val exact = batchFp
+      .join(broadcast(corpusHits), col("fingerprint") <=> col("b_fp"), "left")
+      .withColumn("exact_hit",
+        when(col("corpus_hit").isNotNull
+          || col("doc_id") =!= col("batch_keeper"), lit(1)))
+    val bsh = shingleRows(batch)
+    val csh = shingleRows(corpus)
+    val bsizes = bsh.groupBy("doc_id").agg(count(lit(1)).as("n_b"))
+    val csizes = csh.groupBy("doc_id").agg(count(lit(1)).as("n_c"))
+    val common = csh.toDF("c_doc", "shingle")
+      .join(broadcast(bsh.toDF("b_doc", "shingle")), "shingle")
+      .groupBy("b_doc", "c_doc").agg(count(lit(1)).as("n_common"))
+    val near = common
+      .join(broadcast(bsizes.toDF("b_doc", "n_b")), "b_doc")
+      .join(broadcast(csizes.toDF("c_doc", "n_c")), "c_doc")
+      .filter(col("n_common").cast("double")
+        / (col("n_b") + col("n_c") - col("n_common")) >= minJaccard)
+      .groupBy(col("b_doc").as("doc_id"))
+      .agg(count(lit(1)).as("n_neardup"))
+    exact.join(near, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        col("exact_hit").isNotNull.as("is_exact_dup"),
+        coalesce(col("n_neardup"), lit(0L)).as("n_neardup"),
+        when(col("exact_hit").isNotNull, "reject_exact")
+          .when(coalesce(col("n_neardup"), lit(0L)) > 0, "reject_neardup")
+          .otherwise("admit").as("decision"))
+  }
 }

@@ -104,6 +104,170 @@ class StreamingSpec extends SparkSpec {
     assert(ids() == Seq(1L, 3L, 6L), "replayed batches must not re-admit")
   }
 
+  /** A generated admission feed: a seed corpus of 24 eight-word docs
+    * and eight batches. Each batch carries fresh docs, an exact copy of a
+    * corpus doc, an in-batch copy pair (the copy listed first, under the
+    * larger id), a near-duplicate at exactly the 0.5 threshold (6 of 8
+    * words kept: 4 common shingles of 8 distinct) and one just below it
+    * (5 of 8: 3 of 9), null text (twice in the first batch), docs
+    * shorter than a shingle, and, from the second batch on, a replay of
+    * two of the previous batch's docs under their own ids. */
+  private def admitFeed(): (Seq[(Long, String)], Seq[Seq[(Long, String)]]) = {
+    val rnd = new scala.util.Random(91)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(1000000)}")
+    val seed = (1L to 24L).map(i => i -> words(8).mkString(" "))
+    val pool = scala.collection.mutable.ArrayBuffer(seed.map(_._2): _*)
+    var prev = Seq.empty[(Long, String)]
+    val batches = (1 to 8).map { b =>
+      val base = b * 100L
+      def pick() = pool(rnd.nextInt(pool.size)).split(" ").toSeq
+      val fresh = (1L to 4L).map(i => (base + i) -> words(8).mkString(" "))
+      val copy = words(8).mkString(" ")
+      val docs = fresh ++ Seq(
+        (base + 5) -> pool(rnd.nextInt(pool.size)),
+        (base + 7) -> copy, (base + 6) -> copy,
+        (base + 8) -> (pick().take(6) ++ words(2)).mkString(" "),
+        (base + 9) -> (pick().take(5) ++ words(3)).mkString(" "),
+        (base + 10) -> (null: String),
+        (base + 12) -> s"s$b t$b",
+        (base + 13) -> "u") ++
+        (if (b == 1) Seq((base + 11) -> (null: String)) else Nil) ++
+        prev.filter { case (id, _) => id % 100 == 1 || id % 100 == 8 }
+      pool ++= fresh.map(_._2)
+      prev = docs
+      docs
+    }
+    (seed, batches)
+  }
+
+  private val admitSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  private def docsFrame(rows: Seq[(Long, String)]) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, t) =>
+        org.apache.spark.sql.Row(i, t) }, 1), admitSchema)
+
+  /** Seeds `corpus` with the feed's seed docs (two files, written outside
+    * the stream). Returns the batches, a stager that adds batch `b` to
+    * the input directory as one file, and a drain that runs the
+    * admission stream over that directory with a given checkpoint. */
+  private def admitFixture(corpus: String)
+      : (Seq[Seq[(Long, String)]], Int => Unit, String => Unit) = {
+    val (seed, batches) = admitFeed()
+    docsFrame(seed).repartition(2).write.parquet(corpus)
+    val in = tmpDir("admit_feed")
+    val stage = (b: Int) =>
+      docsFrame(batches(b)).write.mode("append").parquet(in)
+    val drain = (ckpt: String) =>
+      Streaming.corpusAdmitStream(
+        Streaming.parquetFileSource(spark, in, admitSchema), corpus, ckpt)
+        .awaitTermination()
+    (batches, stage, drain)
+  }
+
+  private def decisionRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("doc_id", "is_exact_dup", "n_neardup", "decision")
+      .collect().map(_.toSeq).toSet
+
+  test("corpus admission ≡ the text-derived reference batch by batch; a dropped index partition converges on replay") {
+    import graft.ext.{CorpusIndex, Dedup}
+    val corpus = tmpDir("admit_diff") + "/corpus"
+    val ckpt = tmpDir("admit_diff_ckpt")
+    val (batches, stage, drain) = admitFixture(corpus)
+    def corpusRows() = spark.read.parquet(corpus).select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    batches.indices.foreach { b =>
+      val before = corpusRows()
+      val batch = docsFrame(batches(b))
+      val ref = References.admitBatchText(docsFrame(before), batch, 0.5)
+      val want = decisionRows(ref)
+      assert(decisionRows(Dedup.admitBatch(
+          CorpusIndex.of(docsFrame(before)), batch, 0.5)) == want,
+        s"batch $b: the probe over the text-built index diverges")
+      // the maintained index exists once the stream has run
+      if (b > 0) assert(decisionRows(Dedup.admitBatch(
+          CorpusIndex.maintained(spark, corpus), batch, 0.5)) == want,
+        s"batch $b: the probe over the maintained index diverges")
+      val decided = want.map(r => r(0).asInstanceOf[Long] -> r(3)).toMap
+      val base = (b + 1) * 100L
+      // the fixture reaches every rule
+      assert(decided(base + 6) == "admit" && decided(base + 7) == "reject_exact")
+      assert(decided(base + 5) == "reject_exact")
+      assert(decided(base + 8) == "reject_neardup" && decided(base + 9) == "admit")
+      assert(decided(base + 10) == (if (b == 0) "admit" else "reject_exact"))
+      if (b > 0) assert(decided(base - 99) == "reject_exact")
+      stage(b); drain(ckpt)
+      val added = corpusRows().diff(before)
+      assert(added.map(_._1).sorted ==
+          decided.collect { case (id, "admit") => id }.toSeq.sorted,
+        s"batch $b: the stream admitted other docs than the reference")
+    }
+    // crash state: the last appended corpus file lost its index
+    // partitions (a crash between the corpus append and the index commit)
+    val fs = new org.apache.hadoop.fs.Path(corpus)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val last = fs.listStatus(new org.apache.hadoop.fs.Path(corpus))
+      .filter(_.getPath.getName.startsWith("part-"))
+      .maxBy(_.getModificationTime).getPath.getName
+    Seq("fingerprints", "shingles").foreach { f =>
+      assert(fs.delete(new org.apache.hadoop.fs.Path(
+        s"$corpus/${CorpusIndex.Dir}/$f/batch=${CorpusIndex.fileToken(last)}"), true))
+    }
+    val n = corpusRows().size
+    // replay every batch with a fresh checkpoint
+    drain(tmpDir("admit_diff_ckpt2"))
+    val replayed = corpusRows().size
+    assert(replayed == n, "replayed batches must not re-admit")
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+    val kept = CorpusIndex.maintained(spark, corpus)
+    val rebuilt = CorpusIndex.of(spark.read.parquet(corpus))
+    assert(multiset(kept.fingerprints) == multiset(rebuilt.fingerprints),
+      "maintained fingerprints diverge from a rebuild")
+    assert(multiset(kept.shingles) == multiset(rebuilt.shingles),
+      "maintained shingles diverge from a rebuild")
+  }
+
+  test("corpus admission: while the corpus grows, a warm batch scans no corpus data file and runs at most 10 jobs") {
+    import graft.ext.CorpusIndex
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = Executions.nodes(p).flatMap {
+      case f: FileSourceScanExec => Seq(f)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    val corpus = tmpDir("admit_warm") + "/corpus"
+    val ckpt = tmpDir("admit_warm_ckpt")
+    val (batches, stage, drain) = admitFixture(corpus)
+    val root = new Path(corpus).toUri.getPath
+    val fs = new Path(corpus).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def nFiles = fs.listStatus(new Path(corpus)).count(_.getPath.getName.startsWith("part-"))
+    val perBatch = batches.indices.map { b =>
+      stage(b)
+      val n0 = nFiles
+      val (_, execs, jobs) = Executions.withJobs(spark)(drain(ckpt))
+      assert(nFiles == n0 + 1, s"batch $b: the corpus did not grow by one file")
+      // through caches too: the seed pass reads the text into one
+      val scanned = execs.flatMap(qe => scans(qe.executedPlan))
+        .flatMap(_.relation.location.inputFiles.toSeq)
+      val corpusText = scanned.filter(f => new Path(f).getParent.toUri.getPath == root)
+      if (b == 0) assert(corpusText.nonEmpty,
+        "the seed corpus must be indexed from its text by the first batch")
+      else {
+        assert(scanned.exists(_.contains(s"/${CorpusIndex.Dir}/")),
+          s"batch $b: no scan of the index was seen")
+        assert(corpusText.isEmpty, s"batch $b scanned corpus data files: $corpusText")
+        assert(jobs <= 10, s"batch $b ran $jobs jobs")
+      }
+      (jobs, scanned.distinct.size)
+    }
+    info(s"jobs per batch: ${perBatch.map(_._1).mkString(", ")}; " +
+      s"files scanned per batch: ${perBatch.map(_._2).mkString(", ")}")
+  }
+
   test("streaming media admission: hash index is the dedup state, replay idempotent") {
     val in = tmpDir("madmit_in")
     val mediaOut = tmpDir("madmit_media") + "/media"
