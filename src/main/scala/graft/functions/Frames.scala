@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * branch that is empty at runtime still pays its subtree's scans. A
   * literal local relation broadcasts VALUES, and lets the caller decide
   * plan SHAPE from the collected rows (see
-  * `Profiling.bucketedQuantileSelect`). */
+  * `Profiling.selectAtRanks`). */
 object Frames {
 
   def frameOf(spark: SparkSession, rows: Seq[Row],

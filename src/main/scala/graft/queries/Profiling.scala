@@ -618,270 +618,178 @@ object Profiling {
 
   /** Rows a single pass-2 rank task may hold before the selection
     * re-histograms the target bucket (one recursion level, another
-    * `buckets`× cut). ~4M longs per task is comfortably in executor
+    * `buckets`× cut). ~4M rows per task is comfortably in executor
     * memory; the spec fixture drops it to 0 to force the recursive path
     * and prove the selected rank unchanged. */
   final val BigBucketRows = 4L * 1000 * 1000
 
-  /** Shared core of q134/q135/q136 — EXACT order statistics without a
-    * global sort: classic two-level (plus one recursion level) bucketed
-    * rank selection. `vals` is a (g, v) frame of long-quantized values;
-    * `quantiles` are (label, num, den) fractions, target rank per group =
-    * ceil(num·n/den) computed in exact integer arithmetic. Pass 1
-    * histograms each group into `buckets` equi-width buckets (one
-    * map-side-combined aggregate, ≤ groups×buckets METADATA rows); a
-    * running sum over those rows locates, per (group, quantile), the
-    * bucket holding rank k and the residual rank within it. Pass 2
-    * filters the corpus to the target buckets (scan-local predicate —
-    * reads ~1/buckets of each group) and resolves the residual rank:
-    *  - bucket ≤ `bigBucket` rows → row_number in ONE task (bounded);
+  import graft.functions.Frames.{frameOf, literalize}
+
+  /** Per-group total weight `n`, min/max and double bucket width `w`,
+    * collected and re-emitted as a literal frame (≤ groups rows of
+    * metadata) so later passes broadcast values instead of recomputing
+    * the aggregate subtree. `greatest(…, MIN_NORMAL)` keeps `w` positive
+    * when a group holds a single distinct value (bucket 0 for every row). */
+  private def groupStats(vals: DataFrame, buckets: Int): DataFrame =
+    literalize(
+      vals.groupBy("g").agg(sum(col("wt")).as("n"),
+          min(col("v")).as("vmin"), max(col("v")).as("vmax"))
+        .withColumn("w", greatest(
+          (col("vmax").cast("double") - col("vmin").cast("double")) /
+            lit(buckets.toDouble),
+          lit(java.lang.Double.MIN_NORMAL))))
+
+  /** Unweighted order statistics of a (g, v) frame at rank
+    * ceil(num·n/den): [[weightedQuantileSelect]] with wt = 1. */
+  private[graft] def bucketedQuantileSelect(vals: DataFrame,
+      quantiles: Seq[(String, Long, Long)], buckets: Int,
+      bigBucket: Long): DataFrame =
+    weightedQuantileSelect(vals.withColumn("wt", lit(1L)), quantiles,
+        buckets, bigBucket)
+      .withColumnRenamed("wtot", "n")
+
+  /** Weighted order statistics of a (g, v, wt) frame: per (group,
+    * quantile) the smallest v whose cumulative weight reaches rank
+    * ceil(num·W/den) of the group's total weight W (exact integer
+    * arithmetic), resolved by [[selectAtRanks]]. */
+  private[graft] def weightedQuantileSelect(vals: DataFrame,
+      quantiles: Seq[(String, Long, Long)], buckets: Int,
+      bigBucket: Long): DataFrame = {
+    val spark = vals.sparkSession
+    import spark.implicits._
+    val stats = groupStats(vals, buckets)
+    val ranks = stats.crossJoin(quantiles.toDF("q", "num", "den"))
+      .select(col("g"), col("q"), col("n"),
+        expr("(num * n + den - 1L) div den").as("k"))
+    selectAtRanks(vals, stats, ranks, buckets, bigBucket)
+      .withColumnRenamed("n", "wtot")
+  }
+
+  /** THE rank-selection engine: EXACT (weighted) order statistics without
+    * a global sort, by two-level (plus one recursion level) bucketed rank
+    * selection. Every exact quantile in graft resolves here —
+    * [[bucketedQuantileSelect]] (q134, q135, q136, q155, q156, q160,
+    * q173, q179), [[weightedQuantileSelect]] (q163, q177),
+    * [[exactPercentilesUngrouped]] (q18) and [[groupedPercentilesScalable]]
+    * (q137, which needs TWO explicit ranks per quantile).
+    *
+    * Contract: `vals` is a (g, v, wt) frame — `g` a LOW-cardinality group
+    * key (the collects are bounded by groups×quantiles), `v` long or
+    * finite double (−0.0 and 0.0 are not distinguished), `wt` a POSITIVE
+    * integer weight (wt = 1 is the unweighted case; zero or negative
+    * weights break the strictly increasing running weight the crossing
+    * rule needs). `stats` is [[groupStats]] of the same `vals`/`buckets`,
+    * so `n` is the group's total weight. Each (g, q, k) row of `ranks`
+    * resolves to the smallest v whose cumulative weight reaches k — with
+    * wt = 1 the k-th order statistic, otherwise that of the wt-times-
+    * expanded multiset, at the cost of the compact frame. Output
+    * (g, q, n, k, v), v of the input's type.
+    *
+    * Bucket arithmetic is double for every value type:
+    * b = floor((double v − double vmin) / w), and the sub-bucket likewise.
+    * Every step is monotone non-decreasing in v — FP rounding can move a
+    * bucket BOUNDARY, never reorder values — which is the only property
+    * the running-weight rank location needs; the pick inside the target
+    * bucket orders by v itself, so long results stay exact, and a group
+    * spanning more than Long.MaxValue cannot overflow.
+    *
+    * Pass 1 sums weights per (group, bucket) (one map-side-combined
+    * aggregate, ≤ groups×buckets METADATA rows); a running sum over those
+    * rows locates, per (group, quantile), the bucket whose running weight
+    * crosses k and the residual rank within it. Pass 2 filters the corpus
+    * to the target buckets (scan-local predicate — reads ~1/buckets of
+    * each group) and resolves the residual rank by the same crossing rule
+    * over a running-weight window ordered by v:
+    *  - bucket ≤ `bigBucket` rows → ONE task (bounded);
     *  - bigger → re-histogram the bucket into `buckets` sub-buckets
-    *    (another metadata aggregate) and rank only the target SUB-bucket
-    *    — a further `buckets`× cut, so a straggler needs a single bucket
-    *    past bigBucket·buckets rows;
+    *    (another metadata aggregate) and pick only inside the target
+    *    SUB-bucket — a further `buckets`× cut;
     *  - target sub-bucket holding ONE distinct value (the heavy-key skew
     *    that defeats any equi-width cut) → the order statistic IS that
     *    value, answered from bucket metadata with no corpus task at all.
     * The small/big branch is decided DRIVER-side from the collected
-    * bucket targets — ≤ groups×quantiles rows of index metadata (the
-    * probeIvfIndex collect class; group stats literalize the same way,
-    * saving a redundant aggregate subtree per pass) — so the common case
-    * builds exactly the two-pass plan with ZERO recursive overhead
-    * (declarative always-present union branches measured +60% on q134:
-    * each empty branch still re-scanned the corpus), and only genuinely
-    * oversize buckets pay the sub-histogram passes. Contract: `g` is a
-    * LOW-cardinality group key (event types, sources) — the collects are
-    * bounded by groups×quantiles. Oracles are ALGORITHM-INDEPENDENT flat
-    * `row_number() = k` sorts — affordable at gate scale, which is
-    * exactly what proves the bucketed path exact (the q84/q87 pattern). */
-  import graft.functions.Frames.{frameOf, literalize}
-
-  /** Per-group count/min/max/bucket-width, collected and re-emitted as a
-    * literal frame (≤ groups rows of metadata) so later passes broadcast
-    * values instead of recomputing the aggregate subtree. */
-  private def groupStats(vals: org.apache.spark.sql.DataFrame,
-      buckets: Int): org.apache.spark.sql.DataFrame =
-    literalize(
-      vals.groupBy("g").agg(count(lit(1)).as("n"),
-          min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-        .withColumn("w", expr(s"greatest(1L, (vmax - vmin) div ${buckets}L + 1L)")))
-
-  private[graft] def bucketedQuantileSelect(
-      vals: org.apache.spark.sql.DataFrame,
-      quantiles: Seq[(String, Long, Long)], buckets: Int,
-      bigBucket: Long): org.apache.spark.sql.DataFrame = {
-    val spark = vals.sparkSession
-    import spark.implicits._
-    val qdf = quantiles.toDF("q", "num", "den")
-    val stats = groupStats(vals, buckets)
-    val ranks = stats.crossJoin(qdf)
-      .select(col("g"), col("q"), col("n"),
-        expr("(num * n + den - 1L) div den").as("k"))
-    selectAtRanks(vals, stats, ranks, buckets, bigBucket)
-  }
-
-  /** The selection engine behind [[bucketedQuantileSelect]] (and the
-    * interpolating [[groupedPercentilesScalable]], which needs TWO
-    * explicit ranks per quantile): resolves each (g, q, k) row of `ranks`
-    * to the exact k-th order statistic of its group. `stats` must be the
-    * [[groupStats]] literal frame for the same `vals`/`buckets`. */
-  private def selectAtRanks(
-      vals: org.apache.spark.sql.DataFrame,
-      stats: org.apache.spark.sql.DataFrame,
-      ranks: org.apache.spark.sql.DataFrame, buckets: Int,
-      bigBucket: Long): org.apache.spark.sql.DataFrame = {
+    * bucket targets (≤ groups×quantiles rows of index metadata, the
+    * probeIvfIndex collect class), so the common case builds exactly the
+    * two-pass plan (declarative always-present union branches measured
+    * +60% on q134: each empty branch still re-scanned the corpus), and
+    * only genuinely oversize buckets pay the sub-histogram passes. The
+    * straggler bound is on bucket ROW count, whatever the weights.
+    * Oracles are ALGORITHM-INDEPENDENT flat sorts — affordable at gate
+    * scale, which is exactly what proves the bucketed path exact. */
+  private def selectAtRanks(vals: DataFrame, stats: DataFrame,
+      ranks: DataFrame, buckets: Int, bigBucket: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.StructType
     val spark = vals.sparkSession
+    def runningSum(c: String, part: Seq[String], order: String): Column =
+      sum(col(c)).over(Window.partitionBy(part.map(col): _*).orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    // the one row whose running weight `run` crosses rank `r` — unique
+    // because every step `wt` is ≥ 1 (with wt = 1: row_number = r)
+    def crossing(run: String, wt: String, r: String): Column =
+      col(run) >= col(r) && col(run) - col(wt) < col(r)
     val bucketed = vals.join(broadcast(stats), "g")
-      .withColumn("b", expr("(v - vmin) div w"))
-    val hist = bucketed.groupBy("g", "b").agg(count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy("g").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFirst = Window.partitionBy("g", "q").orderBy("b")
-    val target = hist.withColumn("cum", sum(col("cnt")).over(wCum))
+      .withColumn("b", floor(
+        (col("v").cast("double") - col("vmin").cast("double")) / col("w")))
+    val hist = bucketed.groupBy("g", "b")
+      .agg(sum(col("wt")).as("wsum"), count(lit(1)).as("cnt"))
+    val target = hist.withColumn("cum", runningSum("wsum", Seq("g"), "b"))
       .join(broadcast(ranks), "g")
-      .filter(col("cum") >= col("k"))
-      .withColumn("rn", row_number().over(wFirst))
-      .filter(col("rn") <= 1)
+      .filter(crossing("cum", "wsum", "k"))
       .select(col("g"), col("q"), col("n"), col("k"), col("b").as("tb"),
-        (col("k") - (col("cum") - col("cnt"))).as("residual"),
+        (col("k") - (col("cum") - col("wsum"))).as("residual"),
         col("cnt").as("bcnt"))
     val tRows = target.collect() // pass 1 (the histogram) executes here
     val (bigRows, smallRows) = tRows.partition(_.getAs[Long]("bcnt") > bigBucket)
-    val outSchema = StructType(Seq(target.schema("g"),
-      StructField("q", StringType), StructField("n", LongType),
-      StructField("k", LongType), StructField("v", LongType)))
     def probe(targets: DataFrame): DataFrame =
       bucketed.as("x").join(broadcast(targets.as("t")),
           col("x.g") === col("t.g") && col("x.b") === col("t.tb"))
         .select(col("x.g").as("g"), col("t.q").as("q"), col("t.n").as("n"),
-          col("t.k").as("k"), col("x.v").as("v"), col("x.vmin").as("vmin"),
-          col("x.w").as("w"), col("t.tb").as("tb"),
+          col("t.k").as("k"), col("x.v").as("v"), col("x.wt").as("wt"),
+          col("x.vmin").as("vmin"), col("x.w").as("w"), col("t.tb").as("tb"),
           col("t.residual").as("residual"))
-    def rankWithin(probed: DataFrame, residualCol: String): DataFrame = {
-      val w = Window.partitionBy("g", "q").orderBy("v")
-      probed.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === col(residualCol))
+    def pick(probed: DataFrame, residualCol: String): DataFrame =
+      probed.withColumn("runw", runningSum("wt", Seq("g", "q"), "v"))
+        .filter(crossing("runw", "wt", residualCol))
         .select("g", "q", "n", "k", "v")
-    }
-    // bounded buckets: rank directly (one task holds ≤ bigBucket rows)
+    // bounded buckets: pick directly (one task holds ≤ bigBucket rows)
     val small = if (smallRows.isEmpty) None
-      else Some(rankWithin(probe(frameOf(spark, smallRows, target.schema)), "residual"))
+      else Some(pick(probe(frameOf(spark, smallRows, target.schema)), "residual"))
     // oversize buckets: recurse — sub-histogram each bucket's value range
-    val big = if (bigRows.isEmpty) None else {
-      val bigF = frameOf(spark, bigRows, target.schema)
-      val probedBig = probe(bigF)
-        .withColumn("w2", expr(s"greatest(1L, (w - 1L) div ${buckets}L + 1L)"))
-        .withColumn("b2", expr("(v - vmin - tb * w) div w2"))
-      val wCum2 = Window.partitionBy("g", "q").orderBy("b2")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wFirst2 = Window.partitionBy("g", "q").orderBy("b2")
-      val target2 = probedBig.groupBy("g", "q", "b2")
-        .agg(count(lit(1)).as("cnt2"),
-          min(col("v")).as("bmin"), max(col("v")).as("bmax"))
-        .withColumn("cum2", sum(col("cnt2")).over(wCum2))
-        .join(broadcast(bigF.select("g", "q", "n", "k", "residual")),
-          Seq("g", "q"))
-        .filter(col("cum2") >= col("residual"))
-        .withColumn("rn", row_number().over(wFirst2))
-        .filter(col("rn") <= 1)
-        .select(col("g"), col("q"), col("n"), col("k"), col("b2").as("tb2"),
-          (col("residual") - (col("cum2") - col("cnt2"))).as("residual2"),
-          col("bmin"), col("bmax"))
-      val t2Rows = target2.collect() // sub-histogram pass executes here
-      val (constRows, variedRows) =
-        t2Rows.partition(r => r.getAs[Long]("bmin") == r.getAs[Long]("bmax"))
-      // heavy single value: the target sub-bucket IS bmin — the answer is
-      // already on the driver as metadata, no ranking task at all
-      val const2 = if (constRows.isEmpty) None
-        else Some(frameOf(spark, constRows.map(r => Row(
-          r.get(r.fieldIndex("g")), r.getAs[String]("q"),
-          r.getAs[Long]("n"), r.getAs[Long]("k"),
-          r.getAs[Long]("bmin"))), outSchema))
-      val varied = if (variedRows.isEmpty) None
-        else Some(rankWithin(
-          probedBig.join(broadcast(frameOf(spark, variedRows, target2.schema)
-              .select("g", "q", "tb2", "residual2")), Seq("g", "q"))
-            .filter(col("b2") === col("tb2")), "residual2"))
-      (const2.toSeq ++ varied.toSeq).reduceOption(_ unionByName _)
-    }
-    (small.toSeq ++ big.toSeq).reduceOption(_ unionByName _)
-      .getOrElse(frameOf(spark, Nil, outSchema))
-  }
-
-  /** Per-group count/min/max/bucket-width for DOUBLE values — the
-    * [[groupStats]] twin for [[selectDoubleAtRanks]]. Width is double
-    * arithmetic; `greatest(…, MIN_NORMAL)` keeps it positive when a
-    * group holds a single distinct value (bucket 0 for every row). */
-  private def groupStatsDouble(vals: org.apache.spark.sql.DataFrame,
-      buckets: Int): org.apache.spark.sql.DataFrame =
-    literalize(
-      vals.groupBy("g").agg(count(lit(1)).as("n"),
-          min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-        .withColumn("w", greatest(
-          (col("vmax") - col("vmin")) / lit(buckets.toDouble),
-          lit(java.lang.Double.MIN_NORMAL))))
-
-  /** DOUBLE-valued twin of [[selectAtRanks]]: exact k-th order statistics
-    * of a (g, v: double) frame without a global sort or a single-task
-    * value buffer — the engine behind [[exactPercentilesUngrouped]].
-    * Bucket ids are double arithmetic (`floor((v − vmin) / w)`): FP
-    * rounding can only move a bucket BOUNDARY, never reorder values —
-    * bucket assignment stays monotone in v, which is the only property
-    * the running-count rank location needs; the residual rank resolves
-    * by ordering the one target bucket's rows by v itself. Same
-    * oversize-bucket sub-histogram recursion and single-valued-bucket
-    * shortcut as the long engine (bmin/bmax compared as doubles).
-    * Contract: finite values (no NaN; −0.0 and 0.0 are not
-    * distinguished), low-cardinality `g`. */
-  private def selectDoubleAtRanks(
-      vals: org.apache.spark.sql.DataFrame,
-      stats: org.apache.spark.sql.DataFrame,
-      ranks: org.apache.spark.sql.DataFrame, buckets: Int,
-      bigBucket: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-    val spark = vals.sparkSession
-    val bucketed = vals.join(broadcast(stats), "g")
-      .withColumn("b",
-        floor((col("v") - col("vmin")) / col("w")).cast("long"))
-    val hist = bucketed.groupBy("g", "b").agg(count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy("g").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFirst = Window.partitionBy("g", "q").orderBy("b")
-    val target = hist.withColumn("cum", sum(col("cnt")).over(wCum))
-      .join(broadcast(ranks), "g")
-      .filter(col("cum") >= col("k"))
-      .withColumn("rn", row_number().over(wFirst))
-      .filter(col("rn") <= 1)
-      .select(col("g"), col("q"), col("n"), col("k"), col("b").as("tb"),
-        (col("k") - (col("cum") - col("cnt"))).as("residual"),
-        col("cnt").as("bcnt"))
-    val tRows = target.collect() // pass 1 (the histogram) executes here
-    val (bigRows, smallRows) = tRows.partition(_.getAs[Long]("bcnt") > bigBucket)
-    val outSchema = StructType(Seq(target.schema("g"),
-      StructField("q", StringType), StructField("n", LongType),
-      StructField("k", LongType), StructField("v", DoubleType)))
-    def probe(targets: DataFrame): DataFrame =
-      bucketed.as("x").join(broadcast(targets.as("t")),
-          col("x.g") === col("t.g") && col("x.b") === col("t.tb"))
-        .select(col("x.g").as("g"), col("t.q").as("q"), col("t.n").as("n"),
-          col("t.k").as("k"), col("x.v").as("v"), col("x.vmin").as("vmin"),
-          col("x.w").as("w"), col("t.tb").as("tb"),
-          col("t.residual").as("residual"))
-    def rankWithin(probed: DataFrame, residualCol: String): DataFrame = {
-      val w = Window.partitionBy("g", "q").orderBy("v")
-      probed.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === col(residualCol))
-        .select("g", "q", "n", "k", "v")
-    }
-    val small = if (smallRows.isEmpty) None
-      else Some(rankWithin(probe(frameOf(spark, smallRows, target.schema)), "residual"))
     val big = if (bigRows.isEmpty) None else {
       val bigF = frameOf(spark, bigRows, target.schema)
       val probedBig = probe(bigF)
         .withColumn("w2", greatest(col("w") / lit(buckets.toDouble),
           lit(java.lang.Double.MIN_NORMAL)))
-        .withColumn("b2", floor(
-          (col("v") - (col("vmin") + col("tb") * col("w"))) / col("w2"))
-          .cast("long"))
-      val wCum2 = Window.partitionBy("g", "q").orderBy("b2")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wFirst2 = Window.partitionBy("g", "q").orderBy("b2")
+        .withColumn("b2", floor((col("v").cast("double") -
+          (col("vmin").cast("double") + col("tb") * col("w"))) / col("w2")))
       val target2 = probedBig.groupBy("g", "q", "b2")
-        .agg(count(lit(1)).as("cnt2"),
-          min(col("v")).as("bmin"), max(col("v")).as("bmax"))
-        .withColumn("cum2", sum(col("cnt2")).over(wCum2))
+        .agg(sum(col("wt")).as("wsum2"), min(col("v")).as("bmin"),
+          (min(col("v")) === max(col("v"))).as("single"))
+        .withColumn("cum2", runningSum("wsum2", Seq("g", "q"), "b2"))
         .join(broadcast(bigF.select("g", "q", "n", "k", "residual")),
           Seq("g", "q"))
-        .filter(col("cum2") >= col("residual"))
-        .withColumn("rn", row_number().over(wFirst2))
-        .filter(col("rn") <= 1)
+        .filter(crossing("cum2", "wsum2", "residual"))
         .select(col("g"), col("q"), col("n"), col("k"), col("b2").as("tb2"),
-          (col("residual") - (col("cum2") - col("cnt2"))).as("residual2"),
-          col("bmin"), col("bmax"))
+          (col("residual") - (col("cum2") - col("wsum2"))).as("residual2"),
+          col("bmin"), col("single"))
       val t2Rows = target2.collect() // sub-histogram pass executes here
-      val (constRows, variedRows) =
-        t2Rows.partition(r => r.getAs[Double]("bmin") == r.getAs[Double]("bmax"))
-      // heavy single value: the target sub-bucket IS bmin — answered from
-      // driver metadata, no ranking task
+      val (constRows, variedRows) = t2Rows.partition(_.getAs[Boolean]("single"))
+      // heavy single value: the target sub-bucket IS bmin — the answer is
+      // already on the driver as metadata, no picking task at all
       val const2 = if (constRows.isEmpty) None
-        else Some(frameOf(spark, constRows.map(r => Row(
-          r.get(r.fieldIndex("g")), r.getAs[String]("q"),
-          r.getAs[Long]("n"), r.getAs[Long]("k"),
-          r.getAs[Double]("bmin"))), outSchema))
+        else Some(frameOf(spark, constRows, target2.schema)
+          .select(col("g"), col("q"), col("n"), col("k"), col("bmin").as("v")))
       val varied = if (variedRows.isEmpty) None
-        else Some(rankWithin(
+        else Some(pick(
           probedBig.join(broadcast(frameOf(spark, variedRows, target2.schema)
               .select("g", "q", "tb2", "residual2")), Seq("g", "q"))
             .filter(col("b2") === col("tb2")), "residual2"))
       (const2.toSeq ++ varied.toSeq).reduceOption(_ unionByName _)
     }
     (small.toSeq ++ big.toSeq).reduceOption(_ unionByName _)
-      .getOrElse(frameOf(spark, Nil, outSchema))
+      .getOrElse(frameOf(spark, Nil, StructType(
+        Seq("g", "q", "n", "k").map(target.schema(_)) :+ vals.schema("v"))))
   }
 
   /** Ungrouped EXACT interpolating percentile over double columns — the
@@ -889,7 +797,7 @@ object Profiling {
     * `percentile(c, p)` bit-for-bit (continuous position `p·(n−1)`, the
     * `(higher−pos)·lo + (pos−lower)·hi` IEEE interpolation, and the
     * integral-position / equal-key shortcuts, all straight from
-    * Percentile.getPercentile) — but through [[selectDoubleAtRanks]]'s
+    * Percentile.getPercentile) — but through [[selectAtRanks]]'s
     * two bracketing order statistics instead of the built-in's
     * TypedImperativeAggregate, whose final task merges a buffer holding
     * EVERY distinct value with its count (the q70 cliff in ungrouped
@@ -901,8 +809,8 @@ object Profiling {
       bigBucket: Long = BigBucketRows): org.apache.spark.sql.DataFrame = {
     val vals = df.select(explode(array(cols.map(c =>
         struct(lit(c).as("g"), col(c).cast("double").as("v"))): _*)).as("p"))
-      .select("p.*").filter(col("v").isNotNull)
-    val stats = groupStatsDouble(vals, GroupMedianBuckets)
+      .select("p.*").filter(col("v").isNotNull).withColumn("wt", lit(1L))
+    val stats = groupStats(vals, GroupMedianBuckets)
     // continuous position pos = p·(n−1) in DOUBLE (exactly the built-in's
     // arithmetic — never integer rank fractions here, they round the
     // other side of an integer for some (p, n))
@@ -914,8 +822,7 @@ object Profiling {
         (col("lower") + 1L).as("k"))
       .unionByName(fr.select(col("g"), lit("hi").as("q"), col("n"),
         (col("higher") + 1L).as("k")))
-    val sel = selectDoubleAtRanks(vals, stats, ranks,
-      GroupMedianBuckets, bigBucket)
+    val sel = selectAtRanks(vals, stats, ranks, GroupMedianBuckets, bigBucket)
     val wide = sel.groupBy("g").agg(max(col("n")).as("n"),
       max(when(col("q") === "lo", col("v"))).as("vlo"),
       max(when(col("q") === "hi", col("v"))).as("vhi"))
@@ -929,128 +836,11 @@ object Profiling {
           .as("p_exact"))
   }
 
-  /** WEIGHTED order statistics without a global sort — the weight-aware
-    * twin of [[bucketedQuantileSelect]]: `vals` is a (g, v, wt) frame
-    * with POSITIVE integer weights (contract: wt ≥ 1 — zero/negative
-    * weights break the running-weight monotonicity the crossing rule
-    * needs), and the target is the smallest v whose cumulative weight
-    * reaches rank ceil(num·W/den) of the group's total weight W —
-    * exactly the value the wt-times-expanded multiset's unweighted
-    * order statistic would give, at the cost of the COMPACT frame. Same
-    * two-level discipline: pass 1 sums weights per equi-width bucket
-    * (≤ groups×buckets metadata rows); pass 2 resolves the crossing
-    * INSIDE the one target bucket by a running-weight window, with the
-    * same oversize-bucket sub-histogram and single-valued-bucket
-    * shortcut as the unweighted engine — the straggler bound is on
-    * bucket ROW count, identical to [[selectAtRanks]]. */
-  private[graft] def weightedQuantileSelect(
-      vals: org.apache.spark.sql.DataFrame,
-      quantiles: Seq[(String, Long, Long)], buckets: Int,
-      bigBucket: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val spark = vals.sparkSession
-    import spark.implicits._
-    val qdf = quantiles.toDF("q", "num", "den")
-    val stats = literalize(
-      vals.groupBy("g").agg(sum(col("wt")).as("wtot"),
-          min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-        .withColumn("w",
-          expr(s"greatest(1L, (vmax - vmin) div ${buckets}L + 1L)")))
-    val ranks = stats.crossJoin(qdf)
-      .select(col("g"), col("q"), col("wtot"),
-        expr("(num * wtot + den - 1L) div den").as("k"))
-    val bucketed = vals.join(broadcast(stats), "g")
-      .withColumn("b", expr("(v - vmin) div w"))
-    val hist = bucketed.groupBy("g", "b")
-      .agg(sum(col("wt")).as("wsum"), count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy("g").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFirst = Window.partitionBy("g", "q").orderBy("b")
-    val target = hist.withColumn("cum", sum(col("wsum")).over(wCum))
-      .join(broadcast(ranks), "g")
-      .filter(col("cum") >= col("k"))
-      .withColumn("rn", row_number().over(wFirst))
-      .filter(col("rn") <= 1)
-      .select(col("g"), col("q"), col("wtot"), col("k"), col("b").as("tb"),
-        (col("k") - (col("cum") - col("wsum"))).as("residual"),
-        col("cnt").as("bcnt"))
-    val tRows = target.collect() // pass 1 (the weighted histogram) runs here
-    val (bigRows, smallRows) =
-      tRows.partition(_.getAs[Long]("bcnt") > bigBucket)
-    val outSchema = StructType(Seq(target.schema("g"),
-      StructField("q", StringType), StructField("wtot", LongType),
-      StructField("k", LongType), StructField("v", LongType)))
-    def probe(targets: DataFrame): DataFrame =
-      bucketed.as("x").join(broadcast(targets.as("t")),
-          col("x.g") === col("t.g") && col("x.b") === col("t.tb"))
-        .select(col("x.g").as("g"), col("t.q").as("q"),
-          col("t.wtot").as("wtot"), col("t.k").as("k"),
-          col("x.v").as("v"), col("x.wt").as("wt"),
-          col("x.vmin").as("vmin"), col("x.w").as("w"),
-          col("t.tb").as("tb"), col("t.residual").as("residual"))
-    // smallest v whose running weight reaches the residual rank — runw is
-    // strictly increasing in the frame order (wt ≥ 1), so the first
-    // crossing row is unique and deterministic
-    def crossWithin(probed: DataFrame, residualCol: String): DataFrame = {
-      val w = Window.partitionBy("g", "q").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      probed.withColumn("runw", sum(col("wt")).over(w))
-        .filter(col("runw") >= col(residualCol))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("g", "q").orderBy("runw")))
-        .filter(col("rn") === 1)
-        .select("g", "q", "wtot", "k", "v")
-    }
-    val small = if (smallRows.isEmpty) None
-      else Some(crossWithin(
-        probe(frameOf(spark, smallRows, target.schema)), "residual"))
-    val big = if (bigRows.isEmpty) None else {
-      val bigF = frameOf(spark, bigRows, target.schema)
-      val probedBig = probe(bigF)
-        .withColumn("w2", expr(s"greatest(1L, (w - 1L) div ${buckets}L + 1L)"))
-        .withColumn("b2", expr("(v - vmin - tb * w) div w2"))
-      val wCum2 = Window.partitionBy("g", "q").orderBy("b2")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wFirst2 = Window.partitionBy("g", "q").orderBy("b2")
-      val target2 = probedBig.groupBy("g", "q", "b2")
-        .agg(sum(col("wt")).as("wsum2"),
-          min(col("v")).as("bmin"), max(col("v")).as("bmax"))
-        .withColumn("cum2", sum(col("wsum2")).over(wCum2))
-        .join(broadcast(bigF.select("g", "q", "wtot", "k", "residual")),
-          Seq("g", "q"))
-        .filter(col("cum2") >= col("residual"))
-        .withColumn("rn", row_number().over(wFirst2))
-        .filter(col("rn") <= 1)
-        .select(col("g"), col("q"), col("wtot"), col("k"),
-          col("b2").as("tb2"),
-          (col("residual") - (col("cum2") - col("wsum2"))).as("residual2"),
-          col("bmin"), col("bmax"))
-      val t2Rows = target2.collect() // sub-histogram pass runs here
-      val (constRows, variedRows) =
-        t2Rows.partition(r => r.getAs[Long]("bmin") == r.getAs[Long]("bmax"))
-      val const2 = if (constRows.isEmpty) None
-        else Some(frameOf(spark, constRows.map(r => Row(
-          r.get(r.fieldIndex("g")), r.getAs[String]("q"),
-          r.getAs[Long]("wtot"), r.getAs[Long]("k"),
-          r.getAs[Long]("bmin"))), outSchema))
-      val varied = if (variedRows.isEmpty) None
-        else Some(crossWithin(
-          probedBig.join(broadcast(frameOf(spark, variedRows, target2.schema)
-              .select("g", "q", "tb2", "residual2")), Seq("g", "q"))
-            .filter(col("b2") === col("tb2")), "residual2"))
-      (const2.toSeq ++ varied.toSeq).reduceOption(_ unionByName _)
-    }
-    (small.toSeq ++ big.toSeq).reduceOption(_ unionByName _)
-      .getOrElse(frameOf(spark, Nil, outSchema))
-  }
-
   /** q163: quantity-weighted median price — "the median unit shipped"
     * instead of "the median line item": every line counts `l_quantity`
     * times, answered on the COMPACT frame by [[weightedQuantileSelect]]
     * (expanding the multiset wt-fold and running q135 would multiply
-    * corpus size by the mean weight; the weighted engine pays one
+    * corpus size by the mean weight; the compact frame pays one
     * weighted histogram + one in-bucket running-weight window). Exact
     * integer cents; the oracle pins the weight-expansion semantics via
     * per-value cumulative weights. */
@@ -1228,38 +1018,22 @@ object Profiling {
         "quantization (medianBins quantUnit) or switch to the sketch " +
         "twin (see MaxBinsStateRows scaladoc)")))
 
-  /** Bins-only exact median: a per-group running sum over the
-    * [[medianBins]] state rows picks the value whose cumulative count
-    * first reaches rank ceil(n/2) — no corpus pass at all, so a
-    * monitoring stream can publish exact per-group medians every
-    * micro-batch. Output schema ≡ q135 ([[groupedExactMedian]]);
-    * StreamingSpec pins stream ≡ batch. */
+  /** Bins-only exact median: [[quantilesFromBins]] at rank ceil(n/2) —
+    * no corpus pass at all, so a monitoring stream can publish exact
+    * per-group medians every micro-batch. Output schema ≡ q135
+    * ([[groupedExactMedian]]); StreamingSpec pins stream ≡ batch. */
   def medianFromBins(bins: org.apache.spark.sql.DataFrame,
-      maxBins: Long = MaxBinsStateRows): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wCum = Window.partitionBy("g").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // group totals as a second window over the SAME frame (not a
-    // self-join — a memory-sink view joined to itself trips conflicting
-    // attribute references, and the bins are metadata rows anyway)
-    val wTot = Window.partitionBy("g")
-    bins.withColumn("cum", sum(col("cnt")).over(wCum))
-      .withColumn("n", sum(col("cnt")).over(wTot))
-      .withColumn("__nb", count(lit(1)).over(wTot))
-      .withColumn("k", expr("(n + 1L) div 2L"))
-      .filter(col("cum") >= col("k") && col("cum") - col("cnt") < col("k"))
-      .select(col("g").as("event_type"), col("n"), col("k"),
-        binsGuard(col("__nb"), col("v").cast("double") / 1e6,
-          "medianFromBins", maxBins).as("median"))
+      maxBins: Long = MaxBinsStateRows): org.apache.spark.sql.DataFrame =
+    quantilesFromBins(bins, Seq(("p50", 1L, 2L)), maxBins)
+      .select(col("event_type"), col("n"), col("k"), col("value").as("median"))
       .orderBy("event_type")
-  }
 
-  /** Bins-only exact quantiles — [[medianFromBins]] generalized to the
-    * [[QuantileSpecs]] ranks: the same running sum over the live
-    * [[medianBins]] state picks, per (group, quantile), the value whose
-    * cumulative count first reaches rank ceil(num·n/den). Output schema ≡
-    * q136 ([[groupedExactQuantiles]]); the monitor publishes all three
-    * quantiles from one state pass per micro-batch. */
+  /** Bins-only exact quantiles: a per-group running sum over the live
+    * [[medianBins]] state rows picks, per (group, quantile), the value
+    * whose cumulative count first reaches rank ceil(num·n/den). Output
+    * schema ≡ q136 ([[groupedExactQuantiles]]); the monitor publishes all
+    * three [[QuantileSpecs]] quantiles from one state pass per
+    * micro-batch. */
   def quantilesFromBins(bins: org.apache.spark.sql.DataFrame,
       quantiles: Seq[(String, Long, Long)] = QuantileSpecs,
       maxBins: Long = MaxBinsStateRows): org.apache.spark.sql.DataFrame = {
@@ -1269,6 +1043,9 @@ object Profiling {
     val qdf = quantiles.toDF("q", "num", "den")
     val wCum = Window.partitionBy("g").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // group totals as a second window over the SAME frame (not a
+    // self-join — a memory-sink view joined to itself trips conflicting
+    // attribute references, and the bins are metadata rows anyway)
     val wTot = Window.partitionBy("g")
     bins.withColumn("cum", sum(col("cnt")).over(wCum))
       .withColumn("n", sum(col("cnt")).over(wTot))
@@ -1329,7 +1106,7 @@ object Profiling {
     import graft.functions.Functions.round4
     val spark = events.sparkSession
     import spark.implicits._
-    val vals = eventMicroVals(events)
+    val vals = eventMicroVals(events).withColumn("wt", lit(1L))
     val stats = groupStats(vals, GroupMedianBuckets)
     val qdf = QuantileSpecs.toDF("q", "num", "den")
     // continuous rank r = 1 + num·(n−1)/den; bracket = (kLo, kLo + (m>0))

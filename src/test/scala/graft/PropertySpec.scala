@@ -633,7 +633,12 @@ class PropertySpec extends SparkSpec {
     // crossing regularly lands INSIDE a run of ties
     val rows = (1 to 400).map(_ =>
       ("a", rnd.nextInt(50).toLong * 3, 1L + rnd.nextInt(9))) ++
-      (1 to 300).map(_ => ("b", rnd.nextInt(1000).toLong, 1L + rnd.nextInt(4)))
+      (1 to 300).map(_ => ("b", rnd.nextInt(1000).toLong, 1L + rnd.nextInt(4))) ++
+      // a group spanning more than Long.MaxValue (its bucket width must not
+      // overflow), with the median landing on the first row of a tie run
+      Seq((Long.MinValue, 3L), (Long.MaxValue, 2L), (-1L, 1L), (0L, 1L),
+        (1L, 1L)).map { case (v, wt) => ("c", v, wt) } ++
+      Seq.fill(5)(("c", 42L, 1L))
     val df = rows.toDF("g", "v", "wt")
     val quantiles = Seq(("p25", 1L, 4L), ("p50", 1L, 2L), ("p90", 9L, 10L))
     val got = Profiling.weightedQuantileSelect(
