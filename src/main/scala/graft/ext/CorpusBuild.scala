@@ -284,72 +284,52 @@ object CorpusBuild {
 
   /** Publish a corpus release as a versioned on-disk artifact: the packed
     * manifest, the stage ledger, and a JSON release card (stage counts +
-    * the build constants), written to a staging directory and swapped in
-    * atomically with a backup — the Store.upsertOrders rename discipline,
-    * so a crash mid-publish leaves either the old release or a
-    * recoverable `__backup`, never a torn directory. The card is driver-
-    * written metadata (6 ledger rows + constants); the manifest is the
-    * only data-scale write. */
+    * the build constants), all written into one staging directory that
+    * [[graft.pipeline.Store.publishAtomicWith]] swaps in — a crash
+    * mid-publish leaves either the old release or its recoverable backup,
+    * never a torn directory. The writer repairs a crashed previous swap
+    * first. The card is driver-written metadata (6 ledger rows +
+    * constants); the manifest is the only data-scale write. */
   def publishRelease(spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame, dir: String): Unit = {
+    import graft.pipeline.Store
     import org.apache.hadoop.fs.Path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(dir + "__staging")
-    val backup = new Path(dir + "__backup")
-    val target = new Path(dir)
-    // writer-side repair of a crashed previous publish (repair is
-    // writer-only; see Store.repairPublished)
-    if (!fs.exists(target) && fs.exists(backup) && !fs.rename(backup, target))
-      sys.error(s"release publish: could not recover $backup")
-    fs.delete(staging, true)
-    releaseManifest(docs).write.mode("overwrite")
-      .parquet(new Path(staging, "manifest").toString)
-    releaseLedger(docs).coalesce(1).write.mode("overwrite")
-      .parquet(new Path(staging, "ledger").toString)
-    val rows = spark.read.parquet(new Path(staging, "ledger").toString)
-      .orderBy("stage").collect()
-    val stages = rows.map(r =>
-      s"""{"stage":"${r.getAs[String]("stage")}","n_docs":${
-        r.getAs[Long]("n_docs")},"n_tokens":${r.getAs[Long]("n_tokens")}}""")
-      .mkString("[", ",", "]")
-    val card =
-      s"""{"pack_budget":$PackBudget,"pack_shards":$PackShards,
-         |"near_dup_threshold":$NearDupThreshold,
-         |"funnel":{"min_chars":${TextAnalysis.FunnelMinChars},
-         |"lang":"${TextAnalysis.FunnelLang}",
-         |"min_quality":${TextAnalysis.FunnelMinQuality}},
-         |"ledger":$stages}""".stripMargin.replace("\n", "")
-    val out = fs.create(new Path(staging, "release.json"), true)
-    try out.write(card.getBytes("UTF-8")) finally out.close()
-    fs.delete(backup, true)
-    if (fs.exists(target) && !fs.rename(target, backup))
-      sys.error(s"release publish: could not move $target aside")
-    if (!fs.rename(staging, target)) {
-      if (fs.exists(backup)) fs.rename(backup, target)
-      sys.error(s"release publish: could not publish $staging over $target")
+    Store.repairPublished(spark, dir, "release publish")
+    Store.publishAtomicWith(spark, dir, "release publish") { staging =>
+      releaseManifest(docs).write.mode("overwrite")
+        .parquet(new Path(staging, "manifest").toString)
+      releaseLedger(docs).coalesce(1).write.mode("overwrite")
+        .parquet(new Path(staging, "ledger").toString)
+      val rows = spark.read.parquet(new Path(staging, "ledger").toString)
+        .orderBy("stage").collect()
+      val stages = rows.map(r =>
+        s"""{"stage":"${r.getAs[String]("stage")}","n_docs":${
+          r.getAs[Long]("n_docs")},"n_tokens":${r.getAs[Long]("n_tokens")}}""")
+        .mkString("[", ",", "]")
+      val card =
+        s"""{"pack_budget":$PackBudget,"pack_shards":$PackShards,
+           |"near_dup_threshold":$NearDupThreshold,
+           |"funnel":{"min_chars":${TextAnalysis.FunnelMinChars},
+           |"lang":"${TextAnalysis.FunnelLang}",
+           |"min_quality":${TextAnalysis.FunnelMinQuality}},
+           |"ledger":$stages}""".stripMargin.replace("\n", "")
+      val out = new Path(staging, "release.json")
+      Store.writeSmall(out.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        out, card)
     }
-    fs.delete(backup, true)
   }
 
   /** Read a published release. Read-only: a crash that completed the
-    * move-aside but not the publish is served from the `__backup`
-    * directory directly — the rename repair belongs to the next
-    * publish (a reader cannot tell a crashed swap from one in flight;
-    * its "repair" could steal a live publisher's backup). */
+    * move-aside but not the publish is served from the backup directly
+    * ([[graft.pipeline.Store.resolvePublished]]) — the rename repair
+    * belongs to the next publish (a reader cannot tell a crashed swap
+    * from one in flight; its "repair" could steal a live publisher's
+    * backup). */
   def readRelease(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    import org.apache.hadoop.fs.Path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val target = new Path(dir)
-    val backup = new Path(dir + "__backup")
-    val live =
-      if (fs.exists(target)) target
-      else if (fs.exists(backup)) backup
-      else sys.error(s"release read: nothing published at $dir")
-    (spark.read.parquet(new Path(live, "manifest").toString),
-      spark.read.parquet(new Path(live, "ledger").toString))
+    val live = graft.pipeline.Store.resolvePublished(spark, dir)
+      .getOrElse(sys.error(s"release read: nothing published at $dir"))
+    (spark.read.parquet(s"$live/manifest"), spark.read.parquet(s"$live/ledger"))
   }
 
   /** q118: the release ledger over the gate corpus — every stage's SQL

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.pipeline.Store
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -105,7 +106,7 @@ object CorpusCache {
           s"${ProcessHandle.current().pid()}_" +
           java.util.UUID.randomUUID().toString.take(8))
         build(stage.toString)
-        writeSmall(fs, new Path(stage, "_READY"), "ready")
+        Store.writeSmall(fs, new Path(stage, "_READY"), "ready")
         fs.mkdirs(new Path(base))
         // publish-race discipline: Hadoop FileSystem.rename into an
         // EXISTING directory does not fail like java.io.File.renameTo —
@@ -158,23 +159,5 @@ object CorpusCache {
           if (newestMtime(fs, st.getPath) < cutoff) fs.delete(st.getPath, true)
         } catch { case _: java.io.IOException => () }
       }
-  }
-
-  /** Tiny text artifact write/read through the cache root's FS (the
-    * `_MAXID` class of build metadata). */
-  private[graft] def writeSmall(fs: FileSystem, p: Path, content: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private[graft] def readSmall(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
   }
 }

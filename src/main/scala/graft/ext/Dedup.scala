@@ -636,14 +636,6 @@ object Dedup {
   private[ext] def pairBatchToken(sigs: DataFrame): String =
     graft.pipeline.Store.batchToken(sigs, "doc_id")
 
-  private def commitBatchPartition(spark: org.apache.spark.sql.SparkSession,
-      table: String, token: String, df: DataFrame): Unit =
-    graft.pipeline.Store.commitBatchPartition(spark, table, token, df)
-
-  private def sweepBatchLeftovers(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    graft.pipeline.Store.sweepBatchLeftovers(spark, table)
-
   /** Fold one admitted batch into the index WITHOUT re-reading covered
     * text: shingle + sign the batch only, band-join the new bands
     * against stored ∪ new bands (old×old can never appear — one side is
@@ -657,8 +649,8 @@ object Dedup {
     import graft.pipeline.Store
     Store.repairPublished(spark, s"$dir/sigs", "pair-index append")
     Store.repairPublished(spark, s"$dir/pairs", "pair-index append")
-    sweepBatchLeftovers(spark, s"$dir/pairs")
-    sweepBatchLeftovers(spark, s"$dir/sigs")
+    Store.sweepBatchLeftovers(spark, s"$dir/pairs")
+    Store.sweepBatchLeftovers(spark, s"$dir/sigs")
     val oldSigs = readPairIndexSigs(spark, dir)
     // the batch's signatures feed FOUR consumers (the id guard, the band
     // probe, both score joins, the sigs commit) — stage them as parquet
@@ -690,8 +682,8 @@ object Dedup {
         .distinct()
       val allSigs = oldSigs.unionByName(newSigs)
       val newPairs = scoreCandidates(cand, allSigs, 0.0)
-      commitBatchPartition(spark, s"$dir/pairs", tok, newPairs)
-      commitBatchPartition(spark, s"$dir/sigs", tok, newSigs)
+      Store.commitBatchPartition(spark, s"$dir/pairs", tok, newPairs)
+      Store.commitBatchPartition(spark, s"$dir/sigs", tok, newSigs)
     } finally {
       val p = new org.apache.hadoop.fs.Path(staged)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -717,8 +709,8 @@ object Dedup {
     import graft.pipeline.Store
     Store.repairPublished(spark, s"$dir/sigs", "pair-index compact")
     Store.repairPublished(spark, s"$dir/pairs", "pair-index compact")
-    sweepBatchLeftovers(spark, s"$dir/pairs")
-    sweepBatchLeftovers(spark, s"$dir/sigs")
+    Store.sweepBatchLeftovers(spark, s"$dir/pairs")
+    Store.sweepBatchLeftovers(spark, s"$dir/sigs")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nBatches = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/sigs"))

@@ -545,12 +545,9 @@ object Redaction {
     * state before writing, so a crash mid-build would leave readers a
     * truncated frame they'd serve silently. */
   def buildPrivacyState(customers: DataFrame, dir: String,
-      bandWidth: Double = PrivacyBaseWidth): Unit = {
-    val s = customers.sparkSession
-    graft.pipeline.Store.repairPublished(s, s"$dir/privacy", "privacy build")
-    graft.pipeline.Store.publishAtomic(s, privacyPairs(customers, bandWidth),
-      s"$dir/privacy", "privacy build")
-  }
+      bandWidth: Double = PrivacyBaseWidth): Unit =
+    graft.pipeline.Store.republish(customers.sparkSession, s"$dir/privacy",
+      "privacy build")(privacyPairs(customers, bandWidth))
 
   /** Fold a batch of identity rows into the persisted state WITHOUT
     * rescanning the covered table: batch pairs ∪ stored pairs → one
@@ -559,24 +556,21 @@ object Redaction {
     * recoverable; readers never see a half-written merge). */
   def appendToPrivacyState(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame,
-      bandWidth: Double = PrivacyBaseWidth): Unit = {
-    graft.pipeline.Store.repairPublished(spark, s"$dir/privacy",
-      "privacy append")
-    val stored = readPrivacyState(spark, dir)
-    // GLOBAL width assert (round 12): mergePrivacyPairs' per-group
-    // min/max guard only fires where the two states share a tuple group
-    // — a wrong-width batch covering only NEW tuples (a new nation, say)
-    // would merge silently, and the cards ignore band_width, so they'd
-    // emit silently wrong results. One domain-bounded metadata read.
-    val widths = stored.select("band_width").distinct()
-      .collect().map(_.getDouble(0))
-    if (!widths.forall(_ == bandWidth))
-      sys.error(s"privacy append: width mismatch — state built at " +
-        s"${widths.mkString(",")}, batch aggregated at $bandWidth")
-    graft.pipeline.Store.publishAtomic(spark,
-      mergePrivacyPairs(stored, privacyPairs(batch, bandWidth)),
-      s"$dir/privacy", "privacy append")
-  }
+      bandWidth: Double = PrivacyBaseWidth): Unit =
+    graft.pipeline.Store.republish(spark, s"$dir/privacy", "privacy append") {
+      val stored = readPrivacyState(spark, dir)
+      // GLOBAL width assert (round 12): mergePrivacyPairs' per-group
+      // min/max guard only fires where the two states share a tuple group
+      // — a wrong-width batch covering only NEW tuples (a new nation, say)
+      // would merge silently, and the cards ignore band_width, so they'd
+      // emit silently wrong results. One domain-bounded metadata read.
+      val widths = stored.select("band_width").distinct()
+        .collect().map(_.getDouble(0))
+      if (!widths.forall(_ == bandWidth))
+        sys.error(s"privacy append: width mismatch — state built at " +
+          s"${widths.mkString(",")}, batch aggregated at $bandWidth")
+      mergePrivacyPairs(stored, privacyPairs(batch, bandWidth))
+    }
 
   /** Read the persisted state. Read-only: a crashed append swap is
     * served from the backup; repair belongs to the next writer op. */
@@ -676,23 +670,17 @@ object Redaction {
   /** Persist the incidence state (the [[buildPrivacyState]] discipline:
     * staging + backup atomic publish; a plain Overwrite rebuild would
     * delete the live artifact before writing). */
-  def buildPiiState(docs: DataFrame, dir: String): Unit = {
-    val s = docs.sparkSession
-    graft.pipeline.Store.repairPublished(s, s"$dir/pii", "pii build")
-    graft.pipeline.Store.publishAtomic(s, piiPartials(docs),
-      s"$dir/pii", "pii build")
-  }
+  def buildPiiState(docs: DataFrame, dir: String): Unit =
+    graft.pipeline.Store.republish(docs.sparkSession, s"$dir/pii",
+      "pii build")(piiPartials(docs))
 
   /** Fold an admitted batch of docs into the persisted state WITHOUT
     * rescanning the covered corpus: batch partials ∪ stored partials →
     * one sources-bounded aggregate, atomically published. */
   def appendToPiiState(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame): Unit = {
-    graft.pipeline.Store.repairPublished(spark, s"$dir/pii", "pii append")
-    graft.pipeline.Store.publishAtomic(spark,
-      mergePiiPartials(readPiiState(spark, dir), piiPartials(batch)),
-      s"$dir/pii", "pii append")
-  }
+      dir: String, batch: DataFrame): Unit =
+    graft.pipeline.Store.republish(spark, s"$dir/pii", "pii append")(
+      mergePiiPartials(readPiiState(spark, dir), piiPartials(batch)))
 
   /** Read the persisted state. Read-only: a crashed append swap is
     * served from the backup; repair belongs to the next writer op. */

@@ -68,12 +68,9 @@ object Rollup {
     * mid-build crash would leave readers a truncated frame (round-11
     * hardening, applied to all the build* entry points). */
   def buildStatsRollup(docs: DataFrame, dir: String,
-      keys: Seq[String] = Seq("source", "lang")): Unit = {
-    val s = docs.sparkSession
-    graft.pipeline.Store.repairPublished(s, s"$dir/rollup", "rollup build")
-    graft.pipeline.Store.publishAtomic(s, statsRollup(docs, keys),
-      s"$dir/rollup", "rollup build")
-  }
+      keys: Seq[String] = Seq("source", "lang")): Unit =
+    graft.pipeline.Store.republish(docs.sparkSession, s"$dir/rollup",
+      "rollup build")(statsRollup(docs, keys))
 
   /** Fold a batch into the persisted rollup WITHOUT rescanning the
     * covered corpus: batch partials ∪ stored partials → one group-
@@ -81,12 +78,9 @@ object Rollup {
     * discipline (crashed append leaves the previous rollup
     * recoverable; readers never see a half-written merge). */
   def appendToStatsRollup(spark: SparkSession, dir: String, batch: DataFrame,
-      keys: Seq[String] = Seq("source", "lang")): Unit = {
-    graft.pipeline.Store.repairPublished(spark, s"$dir/rollup", "rollup append")
-    graft.pipeline.Store.publishAtomic(spark,
-      mergeRollups(readStatsRollup(spark, dir), statsRollup(batch, keys), keys),
-      s"$dir/rollup", "rollup append")
-  }
+      keys: Seq[String] = Seq("source", "lang")): Unit =
+    graft.pipeline.Store.republish(spark, s"$dir/rollup", "rollup append")(
+      mergeRollups(readStatsRollup(spark, dir), statsRollup(batch, keys), keys))
 
   /** Read the persisted rollup. Read-only: a crashed append swap is
     * served from the backup; repair belongs to the next writer op. */
@@ -268,23 +262,17 @@ object Rollup {
       .agg(hll_sketch_agg(col("token"), lgK).as("sketch"))
 
   def buildVocabIndex(docs: DataFrame, dir: String,
-      keys: Seq[String] = Seq("source")): Unit = {
-    val s = docs.sparkSession
-    graft.pipeline.Store.repairPublished(s, s"$dir/vocab", "vocab build")
-    graft.pipeline.Store.publishAtomic(s, vocabSketch(docs, keys),
-      s"$dir/vocab", "vocab build")
-  }
+      keys: Seq[String] = Seq("source")): Unit =
+    graft.pipeline.Store.republish(docs.sparkSession, s"$dir/vocab",
+      "vocab build")(vocabSketch(docs, keys))
 
   /** Union a batch's sketches into the persisted index — the same
     * merge-by-union algebra the distributed aggregate already runs
     * across partitions, so append ≡ rebuild on the estimates. */
   def appendToVocabIndex(spark: SparkSession, dir: String, batch: DataFrame,
-      keys: Seq[String] = Seq("source")): Unit = {
-    graft.pipeline.Store.repairPublished(spark, s"$dir/vocab", "vocab append")
-    graft.pipeline.Store.publishAtomic(spark,
-      mergeVocab(readVocabIndex(spark, dir), vocabSketch(batch, keys), keys),
-      s"$dir/vocab", "vocab append")
-  }
+      keys: Seq[String] = Seq("source")): Unit =
+    graft.pipeline.Store.republish(spark, s"$dir/vocab", "vocab append")(
+      mergeVocab(readVocabIndex(spark, dir), vocabSketch(batch, keys), keys))
 
   def readVocabIndex(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.Store.readRecoverableReadOnly(spark, s"$dir/vocab", "vocab read")
@@ -343,21 +331,15 @@ object Rollup {
     * of exactness a sketch index (q141's HLL, q119's CMS) avoids by
     * giving up exact ranks. Crash-safe through the shared
     * staging+backup publish. */
-  def buildBinsIndex(events: DataFrame, dir: String): Unit = {
-    val s = events.sparkSession
-    graft.pipeline.Store.repairPublished(s, s"$dir/bins", "bins build")
-    graft.pipeline.Store.publishAtomic(s,
-      graft.queries.Profiling.medianBins(events), s"$dir/bins", "bins build")
-  }
+  def buildBinsIndex(events: DataFrame, dir: String): Unit =
+    graft.pipeline.Store.republish(events.sparkSession, s"$dir/bins",
+      "bins build")(graft.queries.Profiling.medianBins(events))
 
   def appendToBinsIndex(spark: SparkSession, dir: String,
-      batch: DataFrame): Unit = {
-    graft.pipeline.Store.repairPublished(spark, s"$dir/bins", "bins append")
-    graft.pipeline.Store.publishAtomic(spark,
+      batch: DataFrame): Unit =
+    graft.pipeline.Store.republish(spark, s"$dir/bins", "bins append")(
       mergeBins(readBinsIndex(spark, dir),
-        graft.queries.Profiling.medianBins(batch)),
-      s"$dir/bins", "bins append")
-  }
+        graft.queries.Profiling.medianBins(batch)))
 
   def readBinsIndex(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.Store.readRecoverableReadOnly(spark, s"$dir/bins",
@@ -487,12 +469,12 @@ object Rollup {
         val maxId = docs.agg(max("doc_id")).collect()(0).getLong(0) // 1-row bound
         val hfs = new org.apache.hadoop.fs.Path(stage)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
-        CorpusCache.writeSmall(hfs,
+        Store.writeSmall(hfs,
           new org.apache.hadoop.fs.Path(stage, "_MAXID"), maxId.toString)
       })
     val hfs = new org.apache.hadoop.fs.Path(layout)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val maxId = CorpusCache.readSmall(hfs,
+    val maxId = Store.readSmall(hfs,
       new org.apache.hadoop.fs.Path(layout, "_MAXID")).trim.toLong
     val pruned = Store.skipPrunedScan(s, s"$layout/docs", layout, LayoutSortCol,
       maxId / 3, maxId / 2)
@@ -558,7 +540,7 @@ object Rollup {
         .map(_.getPath.getName).filter(_.startsWith("batch="))
         .map(_.stripPrefix("batch=").toLong)
     }
-    val upto: Long = readUpto(spark, dir, fs)
+    val upto: Long = readUpto(spark, dir)
     val live = partBatches.filter(b => b > upto && b <= batchId)
     if (live.size > compactEvery) {
       graft.pipeline.Store.publishAtomic(spark,
@@ -571,22 +553,18 @@ object Rollup {
     }
   }
 
-  private def readUpto(spark: SparkSession, dir: String,
-      fs: org.apache.hadoop.fs.FileSystem): Long = {
-    val basePath = new org.apache.hadoop.fs.Path(s"$dir/base")
-    val backup = new org.apache.hadoop.fs.Path(s"$dir/base__backup")
-    if (!fs.exists(basePath) && !fs.exists(backup)) -1L
-    else {
-      val r = graft.pipeline.Store
-        .readRecoverableReadOnly(spark, s"$dir/base", "maintenance base")
-        .select(max(col("__upto"))).head()
-      // a base folded ONLY from empty partials has rows=0 → NULL max.
-      // Treating it as "no watermark" is safe: every partial at or below
-      // the lost watermark was empty (that is WHY the base is empty), so
-      // re-including a replayed one merges nothing and cannot double-count.
-      if (r.isNullAt(0)) -1L else r.getLong(0)
+  private def readUpto(spark: SparkSession, dir: String): Long =
+    graft.pipeline.Store.resolvePublished(spark, s"$dir/base") match {
+      case None => -1L
+      case Some(base) =>
+        val r = spark.read.parquet(base).select(max(col("__upto"))).head()
+        // a base folded ONLY from empty partials has rows=0 → NULL max.
+        // Treating it as "no watermark" is safe: every partial at or
+        // below the lost watermark was empty (that is WHY the base is
+        // empty), so re-including a replayed one merges nothing and
+        // cannot double-count.
+        if (r.isNullAt(0)) -1L else r.getLong(0)
     }
-  }
 
   /** Consumer read of a stream-maintained artifact: base ∪ live partials,
     * merged. `upTo` caps which partials participate (the compaction path
@@ -639,12 +617,10 @@ object Rollup {
     def snapshot(attempt: Int): DataFrame = {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val basePath = new org.apache.hadoop.fs.Path(s"$dir/base")
-      val hasBase = fs.exists(basePath) ||
-        fs.exists(new org.apache.hadoop.fs.Path(s"$dir/base__backup"))
+      val published = graft.pipeline.Store.resolvePublished(spark, s"$dir/base")
       val partsPath = new org.apache.hadoop.fs.Path(s"$dir/parts")
       val hasParts = fs.exists(partsPath) && fs.listStatus(partsPath).nonEmpty
-      require(hasBase || hasParts,
+      require(published.isDefined || hasParts,
         s"readMaintained: nothing published under $dir")
       // Base is materialized EAGERLY (localCheckpoint — group-cardinality
       // metadata) and its watermark is taken from THAT snapshot, never from
@@ -654,11 +630,7 @@ object Rollup {
       // base FIRST, partials after: a fold racing this read can only make
       // partials vanish (ABOVE the snapshot's watermark → the retried
       // vanished-file failure), never reappear below it.
-      val base =
-        if (!hasBase) None
-        else Some(graft.pipeline.Store
-          .readRecoverableReadOnly(spark, s"$dir/base", "maintenance base")
-          .localCheckpoint(true))
+      val base = published.map(spark.read.parquet(_).localCheckpoint(true))
       val upto: Long = base match {
         case None => -1L
         case Some(b) =>

@@ -919,22 +919,21 @@ object TextAnalysis {
     * index form of the q119 monitor: build pays the corpus scan once;
     * each batch afterwards merges its own sketch in — Count-Min state is
     * an elementwise SUM, so merge is a d×w-row aggregate (index
-    * metadata, never corpus data). Published with the Store staging +
-    * backup rename discipline so a crashed append leaves the previous
-    * sketch recoverable, and readers never see a half-written merge. */
+    * metadata, never corpus data). Build and append both publish through
+    * [[graft.pipeline.Store.republish]]: a failed rebuild or a crashed
+    * append leaves the previous sketch readable, and readers never see a
+    * half-written merge. */
   def buildCmsIndex(docs: DataFrame, dir: String): Unit =
-    cmsSketch(docs).write.mode("overwrite").parquet(s"$dir/sketch")
+    graft.pipeline.Store.republish(docs.sparkSession, s"$dir/sketch",
+      "cms build")(cmsSketch(docs))
 
   /** Merge a batch's sketch into a persisted index without re-scanning
     * the corpus the index already covers. */
   def appendToCmsIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame): Unit = {
-    graft.pipeline.Store.repairPublished(spark, s"$dir/sketch", "cms append")
-    graft.pipeline.Store.publishAtomic(spark,
+      dir: String, batch: DataFrame): Unit =
+    graft.pipeline.Store.republish(spark, s"$dir/sketch", "cms append")(
       readCmsIndex(spark, dir).unionByName(cmsSketch(batch))
-        .groupBy("r", "b").agg(sum(col("c")).as("c")),
-      s"$dir/sketch", "cms append")
-  }
+        .groupBy("r", "b").agg(sum(col("c")).as("c")))
 
   /** Read a persisted sketch. Read-only: a crashed append swap is served
     * from the backup; the rename repair belongs to the next writer op

@@ -90,16 +90,13 @@ object Scd2 {
       batch: DataFrame, keys: Seq[String], orderCol: String,
       tieBreak: Seq[String]): Unit = {
     val path = s"$dir/dim"
-    graft.pipeline.Store.repairPublished(spark, path, "scd2 append")
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next =
-      if (fs.exists(target))
+    graft.pipeline.Store.republish(spark, path, "scd2 append") {
+      if (graft.pipeline.Store.resolvePublished(spark, path).isDefined)
         applyChanges(readDim(spark, dir), batch, keys, orderCol, tieBreak)
       else fromChangeLog(
         batch.dropDuplicates(keys ++ (orderCol +: tieBreak)),
         keys, orderCol, tieBreak)
-    graft.pipeline.Store.publishAtomic(spark, next, path, "scd2 append")
+    }
   }
 
   /** Read the persisted dimension (consumer path — never repairs). */

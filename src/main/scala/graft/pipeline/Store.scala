@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,22 +51,24 @@ object Store {
     *         the merge inside the staging write (no read-back) */
   def upsertOrders(spark: SparkSession, incoming: DataFrame, tablePath: String,
       key: String = "order_id", orderCol: String = "ingested_at"): Long = {
+    // a writer: finish a crashed previous swap before reading the table
+    // (and before the layout check, which reads the restored marker)
+    repairPublished(spark, tablePath, "upsert swap")
     // a full rewrite of a bucket-partitioned table would flatten __bucket
     // into a data column and strand the partition dirs — refuse rather
     // than silently convert the layout
     if (storedBucketCount(spark, tablePath).isDefined)
       sys.error(s"$tablePath is in incremental (bucket-partitioned) layout; " +
         "use upsertOrdersIncremental")
-    val (merged, written) = observedCount(keepLatest(readTable(spark, tablePath) match {
-      case Some(cur) =>
-        cur.withColumn("__gen", lit(0))
-          .unionByName(incoming.withColumn("__gen", lit(1)),
-            allowMissingColumns = true)
-      case None => incoming
-    }, key, orderCol))
-    // staging write, then swap via backup: the old table is moved aside,
-    // not deleted, before the new one is published — a crash between the
-    // renames leaves a recoverable __backup instead of no table at all
+    // after the repair this is the table itself, or nothing yet
+    val (merged, written) = observedCount(keepLatest(
+      resolvePublished(spark, tablePath) match {
+        case Some(cur) =>
+          spark.read.parquet(cur).withColumn("__gen", lit(0))
+            .unionByName(incoming.withColumn("__gen", lit(1)),
+              allowMissingColumns = true)
+        case None => incoming
+      }, key, orderCol))
     publishAtomic(spark, merged, tablePath, "upsert swap")
     written()
   }
@@ -81,25 +84,14 @@ object Store {
   private final val BucketsMarkerFile = "_graft_buckets"
 
   private def storedBucketCount(spark: SparkSession, tablePath: String): Option[Int] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(tablePath, BucketsMarkerFile)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-      finally in.close()
-    }
+    val fs = fileSystem(spark, tablePath)
+    val marker = new Path(tablePath, BucketsMarkerFile)
+    if (fs.exists(marker)) Some(readSmall(fs, marker).trim.toInt) else None
   }
 
-  private def writeBucketMarker(spark: SparkSession, tablePath: String, n: Int): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(tablePath, BucketsMarkerFile)
-    val out = fs.create(marker, true)
-    try out.write(n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def writeBucketMarker(spark: SparkSession, tablePath: String, n: Int): Unit =
+    writeSmall(fileSystem(spark, tablePath), new Path(tablePath, BucketsMarkerFile),
+      n.toString)
 
   /** Incremental latest-wins upsert — the 100 TB path for S7. The table is
     * laid out as parquet partitioned by `__bucket = pmod(hash(key), n)`, so
@@ -134,9 +126,11 @@ object Store {
       tablePath: String, key: String = "order_id",
       orderCol: String = "ingested_at", numBuckets: Int = UpsertBuckets): Long = {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(tablePath)
+    // a compaction crashed between its renames leaves the table at the
+    // backup only: restore it, or this batch would seed a new table
+    repairPublished(spark, tablePath, "incremental upsert")
+    val fs = fileSystem(spark, tablePath)
+    val target = new Path(tablePath)
     val exists = fs.exists(target)
     val stored = storedBucketCount(spark, tablePath)
     if (exists && stored.isEmpty) {
@@ -183,18 +177,12 @@ object Store {
     * marker lists buckets a previous merge meant to delete — remove them
     * (idempotent) before reading anything, so a crashed apply's ghost
     * rows can't be read back into the next merge. */
-  private def repairPendingClear(fs: org.apache.hadoop.fs.FileSystem,
+  private def repairPendingClear(fs: FileSystem,
       tablePath: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(tablePath, PendingClearFile)
+    val marker = new Path(tablePath, PendingClearFile)
     if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val pending =
-        try scala.io.Source.fromInputStream(in).mkString.split(",")
-          .filter(_.nonEmpty).map(_.toInt).toSeq
-        finally in.close()
-      pending.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(tablePath, s"__bucket=$b"), true)
-      }
+      readSmall(fs, marker).split(",").filter(_.nonEmpty).map(_.toInt)
+        .foreach(b => fs.delete(new Path(tablePath, s"__bucket=$b"), true))
       fs.delete(marker, false)
     }
   }
@@ -224,8 +212,7 @@ object Store {
   private def mergeIntoBuckets(spark: SparkSession, tablePath: String,
       bucketedIncoming: DataFrame, deleteKeys: Option[DataFrame],
       key: String, orderCol: String): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tablePath)
     repairPendingClear(fs, tablePath)
     val incoming = bucketedIncoming.persist()
     try {
@@ -255,7 +242,7 @@ object Store {
           // — and an all-deleted parquet table keeps no schema-bearing
           // file, so it becomes unreadable; refuse BEFORE touching anything
           val untouchedDirs = fs.listStatus(
-              new org.apache.hadoop.fs.Path(tablePath))
+              new Path(tablePath))
             .map(_.getPath.getName)
             .filter(_.startsWith("__bucket="))
             .map(_.stripPrefix("__bucket=").toInt)
@@ -280,15 +267,12 @@ object Store {
         // fully-emptied buckets until the same delta is retried — the
         // price of plain parquet having no atomic multi-file commit.
         if (toClear.nonEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(tablePath, PendingClearFile)
-          val out = fs.create(marker, true)
-          try out.write(toClear.mkString(",")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
+          writeSmall(fs, new Path(tablePath, PendingClearFile),
+            toClear.mkString(","))
           toClear.foreach { b =>
-            fs.delete(new org.apache.hadoop.fs.Path(tablePath, s"__bucket=$b"), true)
+            fs.delete(new Path(tablePath, s"__bucket=$b"), true)
           }
-          fs.delete(new org.apache.hadoop.fs.Path(tablePath, PendingClearFile), false)
+          fs.delete(new Path(tablePath, PendingClearFile), false)
         }
         // the touched partitions now hold exactly the merge: the
         // surviving buckets were rewritten from it, the rest cleared
@@ -304,16 +288,11 @@ object Store {
     * safe) — without this, readers would see them until the next MERGE
     * happened to run. Repair is idempotent and metadata-only. Also
     * recovers a [[compactBuckets]] swap that crashed between its two
-    * renames (table at `__backup` only), same as [[readTable]] does for
+    * renames (table at the backup only), as [[upsertOrders]] does for
     * the full-rewrite path. */
   def readOrdersIncremental(spark: SparkSession, tablePath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(tablePath)
-    val backup = new org.apache.hadoop.fs.Path(tablePath + "__backup")
-    if (!fs.exists(target) && fs.exists(backup) && !fs.rename(backup, target))
-      sys.error(s"could not recover $tablePath from interrupted swap")
-    repairPendingClear(fs, tablePath)
+    repairPublished(spark, tablePath, "incremental read")
+    repairPendingClear(fileSystem(spark, tablePath), tablePath)
     spark.read.parquet(tablePath).drop("__bucket")
   }
 
@@ -330,6 +309,7 @@ object Store {
   def applyDelta(spark: SparkSession, delta: DataFrame, tablePath: String,
       key: String = "order_id", orderCol: String = "ingested_at",
       changeCol: String = "change_type"): Long = {
+    repairPublished(spark, tablePath, "delta apply")
     val buckets = storedBucketCount(spark, tablePath).getOrElse(
       sys.error(s"$tablePath is not in incremental layout; seed it with " +
         "upsertOrdersIncremental before applying deltas"))
@@ -378,13 +358,13 @@ object Store {
   def compactBuckets(spark: SparkSession, tablePath: String,
       targetFileBytes: Long = 128L << 20, key: String = "order_id"): Long = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    repairPublished(spark, tablePath, "compact swap")
+    val fs = fileSystem(spark, tablePath)
     repairPendingClear(fs, tablePath)
     storedBucketCount(spark, tablePath).getOrElse(
       sys.error(s"$tablePath is not in incremental layout; compactBuckets " +
         "only applies to bucket-partitioned tables"))
-    val target = new org.apache.hadoop.fs.Path(tablePath)
+    val target = new Path(tablePath)
     val dataBytes = fs.listStatus(target)
       .filter(_.getPath.getName.startsWith("__bucket="))
       .map(d => fs.getContentSummary(d.getPath).getLength).sum
@@ -398,21 +378,6 @@ object Store {
       writeBucketMarker(spark, staging, newBuckets)
     }
     written()
-  }
-
-  /** Read the published table; if the target directory is absent but a
-    * `__backup` exists, a crash interrupted [[upsertOrders]]' swap between
-    * its two renames (old moved aside, new not yet published) — recover by
-    * re-publishing the backup so readers and the next upsert see the last
-    * committed version instead of a missing table. */
-  private def readTable(spark: SparkSession, path: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val backup = new org.apache.hadoop.fs.Path(path + "__backup")
-    if (!fs.exists(target) && fs.exists(backup)) fs.rename(backup, target)
-    if (fs.exists(target)) Some(spark.read.parquet(path))
-    else None
   }
 
   /** Run-telemetry sink (S9; `pipeline_runs` DDL `storage.py:70-82`). */
@@ -442,8 +407,9 @@ object Store {
 
   /** A15: average of a named metric over time (`storage.py:358-360`). */
   def avgMetric(spark: SparkSession, metricsPath: String, metricName: String): Option[Double] = {
-    readTable(spark, metricsPath).flatMap { df =>
-      val r = df.filter(col("metric_name") === metricName)
+    // an append-only sink: never swapped, so nothing to repair
+    resolvePublished(spark, metricsPath).flatMap { p =>
+      val r = spark.read.parquet(p).filter(col("metric_name") === metricName)
         .agg(avg(col("metric_value")).as("v")).collect().head
       Option(r.getAs[java.lang.Double]("v")).map(_.doubleValue())
     }
@@ -556,7 +522,7 @@ object Store {
     * partition discovery), bounded output ≤64 rows. */
   def fileSizeAudit(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // fold into the ≤64 log2 buckets AS the iterator streams: the
     // audit's driver state is the bucket map, never a per-file buffer —
@@ -606,7 +572,7 @@ object Store {
     * `block` key works for partitioned layouts (`lang=en/part-*.parquet`),
     * not just flat directories. */
   private def qualifiedPrefix(spark: SparkSession, tableDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(tableDir)
+    val p = new Path(tableDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.makeQualified(p).toUri.getPath + "/"
   }
@@ -634,15 +600,15 @@ object Store {
     * file-level index metadata, the same class as a partition listing.
     * Readers then prune files against a predicate BEFORE any footer is
     * opened ([[skipPrunedScan]]), which beats parquet's own row-group
-    * stats by never scheduling a task for a pruned file at all. */
+    * stats by never scheduling a task for a pruned file at all. A
+    * rebuild publishes through [[republish]], so a build that fails
+    * leaves the previous manifest in place. */
   def buildSkipManifest(spark: SparkSession, tableDir: String,
       manifestDir: String, statCols: Seq[String]): Unit = {
     val prefix = qualifiedPrefix(spark, tableDir)
-    zoneMap(
-      spark.read.parquet(tableDir)
-        .withColumn("__f", relFileCol(prefix)),
-      col("__f"), statCols)
-      .write.mode(SaveMode.Overwrite).parquet(s"$manifestDir/manifest")
+    republish(spark, s"$manifestDir/manifest", "manifest build")(zoneMap(
+      spark.read.parquet(tableDir).withColumn("__f", relFileCol(prefix)),
+      col("__f"), statCols))
   }
 
   /** Documented bound on the skip-manifest rows the maintenance/prune
@@ -708,7 +674,7 @@ object Store {
   private def listDataFiles(spark: SparkSession, tableDir: String,
       maxFiles: Long = MaxManifestDriverRows): Seq[(String, String)] = {
     val prefix = qualifiedPrefix(spark, tableDir)
-    val dir = new org.apache.hadoop.fs.Path(tableDir)
+    val dir = new Path(tableDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = scala.collection.mutable.ListBuffer[(String, String)]()
     val it = fs.listFiles(dir, true)
@@ -772,28 +738,37 @@ object Store {
     (freshPaths.size.toLong, vanished.size.toLong)
   }
 
-  /** Staging + backup atomic publish of a small parquet artifact (the
-    * index-metadata discipline shared by the manifest/rollup/sketch
-    * maintenance ops): write to `__staging`, move the live table to
-    * `__backup`, rename staging in, drop the backup. A crash between
-    * the renames leaves `__backup` for the reader-side recovery. */
-  private[graft] def publishAtomic(spark: SparkSession, df: DataFrame,
-      path: String, what: String): Unit =
-    publishAtomicWith(spark, path, what)(
-      df.write.mode(SaveMode.Overwrite).parquet(_))
+  // ---- crash-safe publish protocol --------------------------------------
 
-  /** [[publishAtomic]] with the staging WRITE under caller control — for
-    * artifacts whose layout a plain `df.write.parquet` can't produce
-    * (e.g. the maintained pair index's `batch=` partition tree). The
-    * swap/backup/recovery protocol is identical; `write` receives the
-    * staging path (pre-cleared — a crashed previous publish may have
-    * left one) and must leave a complete artifact under it. */
+  /** The one crash-safe publish of a whole artifact — a parquet table, a
+    * directory tree or a single file. `write` fills `<path>__staging`
+    * (cleared first: a crashed previous publish may have left one) and
+    * must leave a complete artifact there; then the live artifact moves
+    * to `<path>__backup`, staging is renamed in and the backup dropped.
+    * A crash between the two renames leaves the last committed version
+    * at `__backup`, never no artifact: writers finish the swap with
+    * [[repairPublished]], readers serve the backup through
+    * [[resolvePublished]] and never rename. Only this object knows the
+    * two sibling names.
+    *
+    * Users: here the full-rewrite upsert, [[compactBuckets]], the skip
+    * manifest's build/append/sync, [[exportJsonRecords]] and
+    * [[summaryReport]]; the rollup, vocab, bins and maintenance-base
+    * artifacts (`ext.Rollup`), the privacy and PII states
+    * (`ext.Redaction`), the CMS index (`ext.TextAnalysis`), the pair
+    * index (`ext.Dedup`), the corpus release (`ext.CorpusBuild`) and the
+    * SCD2 dimension (`operators.Scd2`).
+    *
+    * The rule for writers: repair BEFORE reading the artifact being
+    * replaced. A frame built while the artifact sits at `__backup` reads
+    * the backup's files, which the repair then renames away under it.
+    * [[republish]] keeps that order for every read-modify-publish. */
   private[graft] def publishAtomicWith(spark: SparkSession, path: String,
       what: String)(write: String => Unit): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(path + "__staging")
-    val backup = new org.apache.hadoop.fs.Path(path + "__backup")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target = new Path(path)
+    val staging = new Path(path + StagingSuffix)
+    val backup = new Path(path + BackupSuffix)
+    val fs = fileSystem(spark, path)
     if (fs.exists(staging)) fs.delete(staging, true)
     write(staging.toString)
     if (fs.exists(backup)) fs.delete(backup, true)
@@ -805,6 +780,78 @@ object Store {
     }
     fs.delete(backup, true)
   }
+
+  private final val StagingSuffix = "__staging"
+  private final val BackupSuffix = "__backup"
+
+  /** [[publishAtomicWith]] of a frame as a parquet table. */
+  private[graft] def publishAtomic(spark: SparkSession, df: DataFrame,
+      path: String, what: String): Unit =
+    publishAtomicWith(spark, path, what)(
+      df.write.mode(SaveMode.Overwrite).parquet(_))
+
+  /** A writer's update of a published parquet artifact: repair a crashed
+    * previous swap, THEN evaluate `next` (which may read the live
+    * artifact or run checks against it), then publish it. A rebuild that
+    * fails in its write job leaves the previous version in place — a
+    * plain Overwrite would have deleted it before the job ran. */
+  private[graft] def republish(spark: SparkSession, path: String,
+      what: String)(next: => DataFrame): Unit = {
+    repairPublished(spark, path, what)
+    publishAtomic(spark, next, path, what)
+  }
+
+  /** WRITER half of the crash protocol (single writer by contract): if
+    * the target is absent but a backup exists, a crash interrupted the
+    * previous publish between its two renames — finish it before
+    * operating; a failed rename fails loudly. ONLY writers may do this
+    * rename: a reader cannot tell a crashed swap from one that is
+    * mid-flight, and a "repair" fired inside a live publish window steals
+    * the writer's backup, failing both the publish and its rollback. */
+  private[graft] def repairPublished(spark: SparkSession, path: String,
+      what: String): Unit = {
+    val target = new Path(path)
+    val backup = new Path(path + BackupSuffix)
+    val fs = fileSystem(spark, path)
+    if (!fs.exists(target) && fs.exists(backup) && !fs.rename(backup, target))
+      sys.error(s"$what: could not recover $backup")
+  }
+
+  /** The last committed version of a published artifact, renaming
+    * nothing: the target if it exists, else the backup a swap crashed
+    * between its renames left, else None. */
+  private[graft] def resolvePublished(spark: SparkSession,
+      path: String): Option[String] = {
+    val fs = fileSystem(spark, path)
+    Seq(path, path + BackupSuffix).find(p => fs.exists(new Path(p)))
+  }
+
+  /** CONSUMER read of a published parquet artifact — never renames (see
+    * [[repairPublished]]). Plain parquet has no snapshot isolation: a
+    * read racing a live publish can still observe FileNotFound at
+    * materialization time — the maintained-artifact consumer path
+    * retries its whole snapshot on that failure
+    * ([[graft.ext.Rollup.readMaintained]]); what THIS primitive
+    * guarantees is that readers never corrupt the writer's protocol. */
+  private[graft] def readRecoverableReadOnly(spark: SparkSession,
+      path: String, what: String): DataFrame =
+    spark.read.parquet(resolvePublished(spark, path).getOrElse(
+      sys.error(s"$what: nothing published at $path")))
+
+  /** Tiny text file write/read — layout markers, the summary report, the
+    * release card, build metadata such as q145's `_MAXID`. */
+  private[graft] def writeSmall(fs: FileSystem, p: Path, content: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+  }
+
+  private[graft] def readSmall(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  private def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ---- batch=-partitioned maintained-artifact commit protocol ----------
   // Shared by the maintained pair index (graft.ext.Dedup), the IVF index
@@ -843,11 +890,11 @@ object Store {
   private[graft] def commitBatchPartition(spark: SparkSession,
       table: String, token: String, df: DataFrame,
       partitionCols: Seq[String] = Nil): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(table)
+    val fs = new Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(s"$table/_staging_$token")
-    val dest = new org.apache.hadoop.fs.Path(s"$table/batch=$token")
-    val replaced = new org.apache.hadoop.fs.Path(s"$table/_replaced_$token")
+    val staging = new Path(s"$table/_staging_$token")
+    val dest = new Path(s"$table/batch=$token")
+    val replaced = new Path(s"$table/_replaced_$token")
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(staging.toString)
@@ -865,48 +912,13 @@ object Store {
     * anything hidden present at op start belongs to a crashed op. */
   private[graft] def sweepBatchLeftovers(spark: SparkSession,
       table: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(table)
+    val p = new Path(table)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.listStatus(p).foreach { st =>
       val n = st.getPath.getName
       if (n.startsWith("_staging_") || n.startsWith("_replaced_"))
         fs.delete(st.getPath, true)
     }
-  }
-
-  /** WRITER half of [[publishAtomic]]'s crash protocol (single writer by
-    * contract): if the target is absent but a `__backup` exists, a crash
-    * interrupted the previous publish between its two renames — finish
-    * it before operating. ONLY writers may do this rename: a reader
-    * cannot tell a crashed swap from one that is mid-flight, and a
-    * "repair" fired inside a live publish window steals the writer's
-    * backup, failing both the publish and its rollback. */
-  private[graft] def repairPublished(spark: SparkSession, path: String,
-      what: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val backup = new org.apache.hadoop.fs.Path(path + "__backup")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(target) && fs.exists(backup) && !fs.rename(backup, target))
-      sys.error(s"$what: could not recover $backup")
-  }
-
-  /** CONSUMER read for [[publishAtomic]] artifacts — never renames (see
-    * [[repairPublished]] for why repair is writer-only): the target if
-    * present, else the `__backup` DIRECTLY — the last committed version
-    * either way. Plain parquet has no snapshot isolation: a read racing
-    * a live publish can still observe FileNotFound at materialization
-    * time — the maintained-artifact consumer path retries its whole
-    * snapshot on that failure ([[graft.ext.Rollup.readMaintained]]);
-    * what THIS primitive guarantees is that readers never corrupt the
-    * writer's protocol. */
-  private[graft] def readRecoverableReadOnly(spark: SparkSession,
-      path: String, what: String): DataFrame = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val backup = new org.apache.hadoop.fs.Path(path + "__backup")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) spark.read.parquet(path)
-    else if (fs.exists(backup)) spark.read.parquet(backup.toString)
-    else sys.error(s"$what: nothing published at $path")
   }
 
   /** Read a published skip manifest. Read-only: a crashed append swap
@@ -965,56 +977,42 @@ object Store {
     * report-class artifacts; corpus-scale exports stay on
     * [[exportJson]]/[[exportParquet]]. Part files are concatenated in
     * sorted name order, so a sorted single-partition input yields a
-    * deterministic artifact. Publish is atomic: bytes go to a
-    * `.inprogress` sibling, then a backup swap installs it — a crash at
-    * any point leaves either the previous artifact (possibly at
-    * `__backup`) or the new one, never neither. */
+    * deterministic artifact. Published through [[publishAtomicWith]]:
+    * a crash at any point leaves either the previous artifact (possibly
+    * at its backup) or the new one, never neither. */
   def exportJsonRecords(df: DataFrame, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     import java.nio.charset.StandardCharsets.UTF_8
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val target = new Path(path)
-    val fs = target.getFileSystem(conf)
+    val spark = df.sparkSession
+    val fs = fileSystem(spark, path)
     val tmpDir = new Path(path + ".parts")
     df.write.mode(SaveMode.Overwrite).json(tmpDir.toString)
     val parts = fs.listStatus(tmpDir).map(_.getPath)
       .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val staging = new Path(path + ".inprogress")
-    val w = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(fs.create(staging, true), UTF_8))
-    try {
-      w.write("[")
-      var first = true
-      parts.foreach { p =>
-        val in = new java.io.BufferedReader(
-          new java.io.InputStreamReader(fs.open(p), UTF_8))
-        try {
-          var line = in.readLine()
-          while (line != null) {
-            if (line.nonEmpty) {
-              if (!first) w.write(",")
-              w.write("\n  ")
-              w.write(line)
-              first = false
+    try publishAtomicWith(spark, path, "json records export") { staging =>
+      val w = new java.io.BufferedWriter(
+        new java.io.OutputStreamWriter(fs.create(new Path(staging), true), UTF_8))
+      try {
+        w.write("[")
+        var first = true
+        parts.foreach { p =>
+          val in = new java.io.BufferedReader(
+            new java.io.InputStreamReader(fs.open(p), UTF_8))
+          try {
+            var line = in.readLine()
+            while (line != null) {
+              if (line.nonEmpty) {
+                if (!first) w.write(",")
+                w.write("\n  ")
+                w.write(line)
+                first = false
+              }
+              line = in.readLine()
             }
-            line = in.readLine()
-          }
-        } finally in.close()
-      }
-      w.write("\n]\n")
-    } finally w.close()
-    fs.delete(tmpDir, true)
-    // backup swap, not delete-then-rename: a crash between the two steps
-    // must leave the PREVIOUS artifact recoverable, never zero artifacts
-    val backup = new Path(path + "__backup")
-    if (fs.exists(backup)) fs.delete(backup, false)
-    if (fs.exists(target) && !fs.rename(target, backup))
-      throw new java.io.IOException(s"cannot move aside existing export at $target")
-    if (!fs.rename(staging, target)) {
-      if (fs.exists(backup)) fs.rename(backup, target)
-      throw new java.io.IOException(s"publish rename failed for $target")
-    }
-    fs.delete(backup, false)
+          } finally in.close()
+        }
+        w.write("\n]\n")
+      } finally w.close()
+    } finally fs.delete(tmpDir, true)
   }
 
   /** Summary-report artifact (`create_summary_report`,
@@ -1036,8 +1034,8 @@ object Store {
     * frames are the 1-row aggregate and ≤ 10×|string cols| top-k rows —
     * metadata-scale, so driver-side JSON assembly is correct here.
     *
-    * Returns the JSON text; `path` (if set) also gets it written
-    * atomically via the cluster filesystem. Key order follows the
+    * Returns the JSON text; `path` (if set) also gets it published
+    * through [[publishAtomicWith]]. Key order follows the
     * reference's report layout. Deterministic given `generatedAt`. */
   def summaryReport(spark: SparkSession, df: DataFrame,
       path: Option[String] = None,
@@ -1123,27 +1121,8 @@ object Store {
       else Nil)
 
     val json = Json.render(report)
-    path.foreach { p =>
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(p + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      // same backup dance as the upsert swap: the previous report is moved
-      // aside, not deleted, before the new one is renamed in — a crash
-      // between the renames leaves a recoverable .bak, never zero reports
-      val target = new org.apache.hadoop.fs.Path(p)
-      val bak = new org.apache.hadoop.fs.Path(p + ".bak")
-      fs.delete(bak, false)
-      if (fs.exists(target) && !fs.rename(target, bak))
-        sys.error(s"could not move previous report aside at $p")
-      if (!fs.rename(tmp, target)) {
-        if (fs.exists(bak)) fs.rename(bak, target)
-        sys.error(s"could not publish report at $p")
-      }
-      fs.delete(bak, false)
-    }
+    path.foreach(p => publishAtomicWith(spark, p, "summary report")(st =>
+      writeSmall(fileSystem(spark, p), new Path(st), json)))
     json
   }
 

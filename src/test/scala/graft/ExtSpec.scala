@@ -2451,6 +2451,17 @@ class ExtSpec extends SparkSpec {
     assert(merged.exceptAll(full).count() == 0 &&
       full.exceptAll(merged).count() == 0,
       "incremental sketch must equal the one-shot build")
+    // a rebuild whose input raises at run time leaves the previous sketch.
+    // Without AQE the failing scan stage runs inside the write job, after
+    // an Overwrite has deleted its target (AQE runs map stages first)
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    intercept[Exception](TextAnalysis.buildCmsIndex(Tables.documents(noAqe, sf)
+      .withColumn("text", when(col("doc_id") === 7, raise_error(lit("boom")))
+        .otherwise(col("text"))), dir))
+    val kept = TextAnalysis.readCmsIndex(spark, dir)
+    assert(kept.exceptAll(full).count() == 0 && full.exceptAll(kept).count() == 0,
+      "a failed rebuild must leave the previous sketch")
     // crash window: sketch moved aside, publish not done — reader recovers
     val p = new java.io.File(dir + "/sketch")
     assert(p.renameTo(new java.io.File(dir + "/sketch__backup")))

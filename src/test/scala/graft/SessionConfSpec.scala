@@ -44,6 +44,34 @@ class SessionConfSpec extends SparkSpec {
       s"build the session through GraftSession instead: ${handBuilt.mkString(", ")}")
   }
 
+  test("no main-tree file but Store.scala names the publish protocol's __staging/__backup siblings") {
+    // Store.publishAtomicWith is the one crash-safe swap and
+    // Store.resolvePublished the one recovery read; a string literal
+    // naming a sibling elsewhere is a hand-written copy of either.
+    // Literals are tokenized together with comments and char literals, so
+    // a quote inside a comment (or "//" inside a string) cannot
+    // desynchronize the scan, and scaladoc mentions do not count.
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get("src", "main", "scala")
+    val stream = Files.walk(root)
+    val sources =
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally stream.close()
+    val token = "(?s)\"\"\"(.*?)\"\"\"|\"((?:[^\"\\\\\n]|\\\\.)*)\"|//[^\n]*|/\\*.*?\\*/|'(?:[^'\\\\\n]|\\\\.)'".r
+    def namesSibling(f: java.nio.file.Path) =
+      token.findAllMatchIn(Files.readString(f)).exists { m =>
+        val lit = Option(m.group(1)).orElse(Option(m.group(2)))
+        lit.exists(l => l.contains("__staging") || l.contains("__backup"))
+      }
+    val store = root.resolve(Paths.get("graft", "pipeline", "Store.scala"))
+    assert(sources.contains(store) && namesSibling(store),
+      "the scan no longer finds Store's own sibling names")
+    val copies = sources.filter(f => f != store && namesSibling(f))
+      .map(root.relativize).sortBy(_.toString)
+    assert(copies.isEmpty, "publish through Store.publishAtomicWith and read " +
+      s"through Store.resolvePublished instead: ${copies.mkString(", ")}")
+  }
+
   test("the factory-built session carries the oracle-critical confs") {
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")

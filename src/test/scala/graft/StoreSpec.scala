@@ -344,6 +344,13 @@ class StoreSpec extends SparkSpec {
     Store.upsertOrdersIncremental(spark,
       ordersDf(("S-3", 3.0, "2024-02-01 00:00:00")), table)
     assert(Store.readOrdersIncremental(spark, table).count() == 3)
+    // a WRITER meeting the same crash restores the table before merging,
+    // instead of seeding a new table from its batch alone
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(table), java.nio.file.Paths.get(table + "__backup"))
+    Store.upsertOrdersIncremental(spark,
+      ordersDf(("S-4", 4.0, "2024-03-01 00:00:00")), table)
+    assert(Store.readOrdersIncremental(spark, table).count() == 4)
   }
 
   test("exports + topk retrieval + stats (S8, S11-S14)") {
@@ -384,11 +391,12 @@ class StoreSpec extends SparkSpec {
     assert(text.indexOf("C-1") < text.indexOf("C-2")
       && text.indexOf("C-2") < text.indexOf("C-3"), "row order not preserved")
     // no leftovers; re-export atomically replaces
-    val dir = java.nio.file.Paths.get(base)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out + ".parts"))
-      && !java.nio.file.Files.exists(java.nio.file.Paths.get(out + ".inprogress")))
+    def leftovers = Seq(".parts", "__staging", "__backup")
+      .filter(sfx => java.nio.file.Files.exists(java.nio.file.Paths.get(out + sfx)))
+    assert(leftovers.isEmpty, s"left behind: $leftovers")
     Store.exportJsonRecords(df.limit(2), out)
     assert(spark.read.option("multiLine", "true").json(out).count() == 2)
+    assert(leftovers.isEmpty, s"re-export left behind: $leftovers")
     // an EMPTY frame publishes an empty-array document, not garbage
     Store.exportJsonRecords(df.filter("order_id = 'NOPE'"), out)
     val empty = java.nio.file.Files.readString(java.nio.file.Paths.get(out))
@@ -693,6 +701,17 @@ class StoreSpec extends SparkSpec {
     assert(rev.getAs[Double]("lowest_order") == 10.0)
     // returned text is what landed on disk
     assert(json.contains("\"report_generated_at\": \"2026-01-01T00:00:00Z\""))
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) == json)
+    // a second publish to the same path replaces the content and leaves
+    // neither a staging nor a backup sibling
+    val json2 = Store.summaryReport(spark, df.filter(col("order_id") =!= "A-5"),
+      Some(path), generatedAt = "2026-01-02T00:00:00Z")
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) == json2)
+    assert(spark.read.option("multiLine", "true").json(path)
+      .collect().head.getAs[Long]("total_records") == 4)
+    Seq("__staging", "__backup").foreach(sfx => assert(
+      !java.nio.file.Files.exists(java.nio.file.Paths.get(path + sfx)),
+      s"report publish left $path$sfx behind"))
     // empty input is a contract violation like the reference's failure result
     intercept[IllegalArgumentException] {
       Store.summaryReport(spark, df.filter(lit(false)), None)
@@ -930,6 +949,26 @@ class StoreSpec extends SparkSpec {
     // the next writer op repairs first, then sees nothing new to scan
     assert(Store.appendToSkipManifest(spark, table, manifest, Seq("doc_id")) == 0)
     assert(p.exists(), "the writer must complete the crashed swap")
+    // a rebuild whose scan fails at run time leaves the previous manifest:
+    // one data file (sorted after the others, so schema inference never
+    // opens it) stores doc_id as a string and fails its scan task. Without
+    // AQE that stage runs inside the write job, after an Overwrite has
+    // deleted its target (AQE runs map stages first)
+    val bad = tmp("skip_app_bad")
+    spark.range(1).selectExpr("'x' AS doc_id").coalesce(1)
+      .write.mode("overwrite").parquet(bad)
+    val badFile = new java.io.File(bad).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(badFile.toPath,
+      java.nio.file.Paths.get(table, "zz-bad.parquet"))
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    intercept[Exception](
+      Store.buildSkipManifest(noAqe, table, manifest, Seq("doc_id")))
+    val kept = Store.readSkipManifest(spark, manifest)
+    assert(kept.exceptAll(fromScratch).count() == 0 &&
+      fromScratch.exceptAll(kept).count() == 0,
+      "a failed rebuild must leave the previous manifest")
   }
 
   test("skip manifest: table dir with spaces/%/+ keys consistently — append is a no-op, pruned scan resolves") {
